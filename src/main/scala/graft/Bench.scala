@@ -60,26 +60,29 @@ object Bench {
         .sortBy { case (_, r) => -r })
   }
 
+  /** Clears the four cross-query memos once per ROUND. Within a round
+    * queries legitimately share them (the operators' documented
+    * design): q_dedup_clusters reuses q_dedup_minhash's checkpointed
+    * pairs, q_dedup_embedding/q_ann_lsh share the signed corpus, the
+    * seven structural queries share one purchase-graph edge frame and
+    * pair census, and the per-segment statistics share the
+    * segment-labeled order fact. Across rounds each round re-pays them,
+    * so medians time the real work, not a warm checkpoint read.
+    */
+  private[graft] def clearMemos(): Unit = {
+    ops.Dedup.clearPairsMemo()
+    ops.Similarity.clearSignedMemo()
+    ops.Graph.clearGraphMemo()
+    ops.SegOrders.clear()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 5 rounds (was 3): a box-load spike during one round now leaves the
     // median supported by 4 clean samples instead of 2 — r5's driver run
     // had per-query max/min spreads up to 72× purely from contention
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt.max(1)
-    // SPARK_GRAFT_SQL_CONF="k=v;k2=v2" — dev-only conf override for
-    // A/B config arms (a -D system property cannot override a
-    // .config() pinned on the builder). The driver never sets it; the
-    // timed methodology is unchanged.
-    val confOverrides = sys.env.get("SPARK_GRAFT_SQL_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark = confOverrides
-      .foldLeft(GraftSession.local(cpus.toInt, "graft-bench")) {
-        case (b, (k, v)) => b.config(k, v)
-      }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarnings()
+    val spark = GraftSession.fromEnv("graft-bench")
     // Warm the JVM + parquet footer caches ON THE BENCHMARKED DATASET
     // so the first timed query doesn't absorb one-time session costs.
     graft.ops.Relational.pricingSummary(spark, sfDir).count()
@@ -106,23 +109,7 @@ object Bench {
     val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt > 0
     val rounds = (if (warmup) Seq(0) else Seq.empty) ++ (1 to iters)
     for (round <- rounds) {
-      // the memoized MinHash pair set AND signed embedding corpus are
-      // cleared once per ROUND: within a round q_dedup_clusters
-      // legitimately reuses q_dedup_minhash's checkpointed pairs and
-      // q_dedup_embedding/q_ann_lsh share the signed corpus (the
-      // operators' documented design); across rounds each round re-pays
-      // the full sketch pipeline, so medians time the real work, not a
-      // warm checkpoint read
-      graft.ops.Dedup.clearPairsMemo()
-      graft.ops.Similarity.clearSignedMemo()
-      // same discipline for the shared purchase-graph frames: within a
-      // round the seven structural queries legitimately share one edge
-      // frame and one pair census; across rounds each round re-pays them
-      graft.ops.Graph.clearGraphMemo()
-      // ditto the segment-labeled order fact shared by the per-segment
-      // statistics: within a round the first pays the join, across
-      // rounds each round re-pays it
-      graft.ops.SegOrders.clear()
+      clearMemos()
       names.foreach { case (name, fn) =>
         if (!errs.contains(name)) {
           val t0 = System.nanoTime()
@@ -255,11 +242,7 @@ object Bench {
     // query NAMES dominate the line, so every byte of value formatting
     // counts: "sf" is the directory BASENAME (the full path lives in
     // BENCH_LAST.json), and precision is magnitude-aware — a 45-second
-    // query doesn't need centisecond digits. If the query set ever
-    // grows the line past the tail window, degrade (2→1→0 decimals)
-    // before dropping the per-query map entirely — partial precision
-    // beats an unparseable line, and an empty map is the very last
-    // resort.
+    // query doesn't need centisecond digits.
     def trim(d: Double, dp: Int): String = {
       val s = s"%.${dp}f".format(d)
       if (!s.contains('.')) s
@@ -271,57 +254,40 @@ object Bench {
     // whole-second medians in the tail window. The line carries
     // "prefix":"q_" so the renaming is self-describing; BENCH_LAST.json
     // keeps full names.
-    def compactLine(dp: Int, withQueries: Boolean): String = {
-      val qs =
-        if (!withQueries) "{}"
-        else times.map { case (name, ts) =>
-          val m = if (errs.contains(name) || ts.isEmpty) -1.0 else median(ts.toSeq)
-          // magnitude-aware: sub-10s values keep dp decimals, 10s+ one
-          // fewer — resolution stays ~1% of the value either way
-          val useDp = if (math.abs(m) >= 10) (dp - 1).max(0) else dp
-          s"\"${name.stripPrefix("q_")}\":${trim(m, useDp)}"
-        }.mkString("{", ",", "}")
+    def compactLine(qs: String, omitted: String): String =
       s"""{"metric":"total","value":${f(total)},"tmin":${trim(totalMin, 2)},""" +
         s""""spread":${trim(spread, 1)},"drift":${trim(drift, 2)},""" +
         s""""unit":"sec","prefix":"q_",""" +
         s""""queries":$qs,"regressions":$regrLine,""" +
-        s""""iters":$iters,"failed":$failed,"sf":"$sfBase"}"""
-    }
-    // Past ~110 queries even the 0-decimal full map overflows the tail
-    // window (the ~1500 bytes of names are irreducible), so the next
-    // rung keeps the MOST EXPENSIVE queries — the ones a plan audit
-    // needs — and says how many cheap ones were cut ("omitted":k).
-    // BENCH_LAST.json always has the full set.
-    def topLine(dp: Int): String = {
-      val medians = times.map { case (name, ts) =>
-        name -> (if (errs.contains(name) || ts.isEmpty) -1.0 else median(ts.toSeq))
-      }.toSeq.sortBy { case (_, m) => -m }
-      val budget = 1940 -
-        compactLine(dp, false).length - ""","omitted":000""".length
-      val (entries, _) = medians.foldLeft((List.empty[String], 0)) {
-        case ((acc, used), (name, m)) =>
-          val useDp = if (math.abs(m) >= 10) (dp - 1).max(0) else dp
-          val e = s"\"${name.stripPrefix("q_")}\":${trim(m, useDp)}"
-          if (used + e.length + 1 <= budget) (e :: acc, used + e.length + 1)
-          else (acc, used)
-      }
-      val omitted = medians.length - entries.length
-      s"""{"metric":"total","value":${f(total)},"tmin":${trim(totalMin, 2)},""" +
-        s""""spread":${trim(spread, 1)},"drift":${trim(drift, 2)},""" +
-        s""""unit":"sec","prefix":"q_",""" +
-        s""""queries":${entries.reverse.mkString("{", ",", "}")},""" +
-        s""""regressions":$regrLine,""" +
-        s""""omitted":$omitted,"iters":$iters,"failed":$failed,"sf":"$sfBase"}"""
-    }
+        s"""$omitted"iters":$iters,"failed":$failed,"sf":"$sfBase"}"""
+    val queryless = compactLine("{}", "")
     // 1940, not 2000: the tail window also has to hold the build tool's
     // "[success] Total time: …" footer (~80 chars), so leave headroom
     // for exactly that and spend the rest on per-query precision.
-    // last-resort fallback can never be absent: even if the query-less
-    // line overflows (e.g. a huge failed-query list), emit it anyway —
-    // an over-long metric line beats no metric line at all
-    val line = (Seq(2, 1, 0).map(compactLine(_, true)) ++ Seq(topLine(2), topLine(1)) :+
-      compactLine(2, false))
-      .find(_.length <= 1940).getOrElse(compactLine(2, false))
+    // The ~4.8k chars of names of a full run cannot fit, so the line
+    // keeps the MOST EXPENSIVE queries — the ones a plan audit needs —
+    // and says how many cheap ones were cut ("omitted":k); a subset run
+    // that fits lists every query with "omitted":0. BENCH_LAST.json
+    // always has the full set.
+    val top = {
+      val medians = times.map { case (name, ts) =>
+        name -> (if (errs.contains(name) || ts.isEmpty) -1.0 else median(ts.toSeq))
+      }.toSeq.sortBy { case (_, m) => -m }
+      val budget = 1940 - queryless.length - ""","omitted":000""".length
+      val (entries, _) = medians.foldLeft((List.empty[String], 0)) {
+        case ((acc, used), (name, m)) =>
+          // sub-10s values keep 2 decimals, 10s+ one: ~1% resolution
+          val e = s"\"${name.stripPrefix("q_")}\":${trim(m, if (math.abs(m) >= 10) 1 else 2)}"
+          if (used + e.length + 1 <= budget) (e :: acc, used + e.length + 1)
+          else (acc, used)
+      }
+      compactLine(entries.reverse.mkString("{", ",", "}"),
+        s""""omitted":${medians.length - entries.length},""")
+    }
+    // the last resort can never be absent: even if the query-less line
+    // overflows (e.g. a huge failed-query list), emit it anyway — an
+    // over-long metric line beats no metric line at all
+    val line = if (top.length <= 1940) top else queryless
     val full = s"""{"metric":"total","value":${f(total)},"tmin":${f(totalMin)},""" +
       s""""spread":${f(spread)},"drift":${f(drift)},""" +
       s""""unit":"sec","warmup":${if (warmup) 1 else 0},""" +

@@ -19,18 +19,7 @@ object Explain {
     val rest = args.filterNot(a => a == "-v" || a == "-x")
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (rest.length > 1) rest.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(8)
-    // SPARK_GRAFT_SQL_CONF="k=v;k2=v2" — override builder-pinned SQL
-    // confs for before/after plan capture (a -D system property cannot
-    // override a .config() set on the builder). Diagnostic tool only.
-    val overrides = sys.env.get("SPARK_GRAFT_SQL_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark = overrides
-      .foldLeft(GraftSession.local(cpus, "graft-explain")) {
-        case (b, (k, v)) => b.config(k, v)
-      }.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.fromEnv("graft-explain", logLevel = "ERROR")
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, dir)
       val plan =

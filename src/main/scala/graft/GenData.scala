@@ -80,9 +80,7 @@ object GenData {
     val Array(sfStr, out) = args
     val sf = sfStr.toDouble
     require(sf > 0, s"bad sf $sf")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = GraftSession.local(cpus, "graft-gendata").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-gendata")
     new java.io.File(out).mkdirs()
     generate(spark, sf, out)
     spark.stop()

@@ -134,4 +134,25 @@ object GraftSession {
       }
     localDir.fold(b)(d => b.config("spark.local.dir", d))
   }
+
+  /** The one environment-to-session entry of the tool mains: a [[local]]
+    * session on `SPARK_GRAFT_CPUS` cores (default: every core the JVM
+    * sees), with `SPARK_GRAFT_SQL_CONF="k=v;k2=v2"` applied over the
+    * builder's pinned confs — a -D system property cannot override a
+    * `.config()` set on the builder, so A/B config arms and
+    * before/after plan captures go through this variable.
+    */
+  def fromEnv(appName: String, logLevel: String = "WARN"): SparkSession = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val overrides = sys.env.get("SPARK_GRAFT_SQL_CONF").toSeq
+      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
+      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
+    val spark = overrides
+      .foldLeft(local(cores, appName)) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    quietBoundedWindowWarnings()
+    spark
+  }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * (many-job-barrier) query spends its time that `Bench`'s one number
   * per query cannot give (guide §1: measure first; §7.1 without a UI).
   * Usage: `run_main.sh graft.Profile <sfDir> <queryName> [iters]`.
-  * Reads SPARK_GRAFT_CPUS like Bench. Diagnostic only — not part of
+  * Builds its session like Bench. Diagnostic only — not part of
   * the driver contract.
   */
 object Profile {
@@ -16,10 +16,7 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val iters = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus, "graft-profile").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarnings()
+    val spark = GraftSession.fromEnv("graft-profile")
 
     case class Job(id: Int, desc: String, ms: Long, nTasks: Int, nStages: Int,
                    names: Seq[String])
@@ -81,10 +78,7 @@ object Profile {
 
     val fn = SparkEntry.queries(name)
     for (round <- 0 to iters) {
-      graft.ops.Dedup.clearPairsMemo()
-      graft.ops.Similarity.clearSignedMemo()
-      graft.ops.Graph.clearGraphMemo()
-      graft.ops.SegOrders.clear()
+      Bench.clearMemos()
       done.clear()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -20,10 +20,7 @@ object RecallDials {
     // 1.0) so tool and spec share one generated dir
     val sfName = if (sf == sf.toLong.toDouble) sf.toLong.toString else sf.toString
     val dir = s"$base/sf$sfName-emb"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = GraftSession.local(cpus, "graft-recall-dials").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarnings()
+    val spark = GraftSession.fromEnv("graft-recall-dials")
     if (!new java.io.File(s"$dir/embeddings.parquet").exists())
       GenData.generateEmbeddings(spark, sf, dir)
     ops.Similarity.writeAnnIndex(spark, dir, "recall_dials_idx")

@@ -5,10 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt, "graft-verify").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarnings()
+    val spark = GraftSession.fromEnv("graft-verify")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q_a,q_b — dump/check a subset while
     // iterating on an operator (the driver never sets it; default all)

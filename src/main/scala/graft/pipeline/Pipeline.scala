@@ -1,23 +1,10 @@
 package graft.pipeline
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-import java.util.concurrent.{Executors, ThreadFactory, TimeoutException}
+import java.util.concurrent.{Executors, ThreadFactory}
 import scala.concurrent.duration._
 import scala.util.control.NonFatal
 import scala.util.{Failure, Success, Try}
-
-/** Cooperative per-batch cancellation signal handed to the processor —
-  * the Scala analogue of the `context.Context` the reference passes to
-  * `ProcessBatch` (`batch_processor.go:21-23,157-159`). Like Go's, it
-  * is advisory: a processor that ignores it simply runs long, and the
-  * timeout error is substituted after it returns.
-  */
-trait BatchContext {
-  /** True once the per-batch deadline has passed. */
-  def isExpired: Boolean
-  /** Nanotime deadline for this batch. */
-  def deadlineNanos: Long
-}
 
 object Pipeline {
   /** `DefaultTimeout` = 2147483647 ms ≈ 24.8 days — "effectively no
@@ -47,6 +34,9 @@ object Pipeline {
   *    substituted before finalize (`:157-164`)
   *  - any throwable from the processor is caught (`recover()`,
   *    `:169-180`) and handed to the finalizer as `(None, Some(e))`
+  *  - these two rules, the timeout coercion and the finalizer's
+  *    exception isolation live in [[BatchPolicy]], the one per-batch
+  *    policy this facade shares with `graft.streaming.MicroBatch`
   *  - `stop()` blocks until in-flight workers drain (10 ms poll,
   *    `:86-97`); a batch fetched during shutdown is dropped
   *    unprocessed (`:137-140`); `start()` after `stop()` is a no-op
@@ -98,13 +88,9 @@ final class Pipeline[T] private (
   /** Mirrors `WithProcessorTimeout`: non-positive values reset to the
     * default (`batch_processor.go:74-83`).
     */
-  def withProcessorTimeout(d: Duration): Pipeline[T] = {
-    val eff = d match {
-      case f: FiniteDuration if f > Duration.Zero => f
-      case _ => Pipeline.DefaultTimeout
-    }
-    new Pipeline(maxConcurrentBatches, supplier, processor, finalizer, noBatchSleep, eff)
-  }
+  def withProcessorTimeout(d: Duration): Pipeline[T] =
+    new Pipeline(maxConcurrentBatches, supplier, processor, finalizer, noBatchSleep,
+      BatchPolicy.timeout(d))
 
   /** One dispatch sweep: fetch and dispatch up to the number of free
     * worker slots (`tryProcessBatch`, `batch_processor.go:115-145`).
@@ -133,35 +119,12 @@ final class Pipeline[T] private (
     }
   }
 
-  /** Worker body (`processBatchAsync` + `recoverIfNeeded`,
-    * `batch_processor.go:147-180`).
+  /** Worker body: the shared per-batch policy ([[BatchPolicy.run]]),
+    * then release the worker slot.
     */
-  private def runBatch(batch: Seq[T]): Unit = {
-    val deadline = System.nanoTime() + processorTimeout.toNanos
-    val ctx = new BatchContext {
-      def isExpired: Boolean = System.nanoTime() > deadline
-      def deadlineNanos: Long = deadline
-    }
-    try {
-      val result =
-        try processor(ctx, batch)
-        catch { case NonFatal(e) => Failure(e) } // recover(): panic → error (:169-180)
-      result match {
-        case Success(processed) if ctx.isExpired =>
-          // deadline passed but processor returned no error → substitute (:162-164)
-          finalizeIfConfigured(Some(processed), Some(new TimeoutException("context canceled")))
-        case Success(processed) =>
-          finalizeIfConfigured(Some(processed), None)
-        case Failure(e) =>
-          finalizeIfConfigured(None, Some(e))
-      }
-    } finally inFlight.decrementAndGet()
-  }
-
-  private def finalizeIfConfigured(p: Option[Seq[T]], e: Option[Throwable]): Unit =
-    if (finalizer != null) {
-      try finalizer(p, e) catch { case NonFatal(_) => () }
-    }
+  private def runBatch(batch: Seq[T]): Unit =
+    try BatchPolicy.run(BatchPolicy.context(processorTimeout), processor, finalizer, batch)
+    finally inFlight.decrementAndGet()
 
   /** Spawn the dispatcher loop (`Start`, `batch_processor.go:99-113`).
     * No-op once `stop()` has been requested (`:100-102`).

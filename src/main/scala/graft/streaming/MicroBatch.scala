@@ -1,11 +1,9 @@
 package graft.streaming
 
-import graft.pipeline.{BatchContext, Pipeline}
+import graft.pipeline.{BatchContext, BatchPolicy, Pipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import java.util.concurrent.TimeoutException
 import scala.concurrent.duration._
-import scala.util.control.NonFatal
 import scala.util.{Failure, Success, Try}
 
 /** Structured-Streaming realization of the reference's polling pipeline
@@ -19,8 +17,9 @@ import scala.util.{Failure, Success, Try}
   * Error policy matches the reference (at-most-once): a processor
   * failure is reported to the finalizer and the STREAM CONTINUES with
   * the next trigger — the batch is not retried, the query is not
-  * failed. Timeout is elapsed-substitution, identical to
-  * [[graft.pipeline.Pipeline]].
+  * failed. That policy (deadline context, panic recovery, timeout
+  * substitution, finalizer isolation) is `graft.pipeline.BatchPolicy`,
+  * the same code [[graft.pipeline.Pipeline]] runs per batch.
   */
 object MicroBatch {
 
@@ -57,41 +56,30 @@ object MicroBatch {
       availableNow: Boolean = false,
       checkpoint: Option[String] = None): StreamingQuery = {
     require(processor != null, "invalid processor")
-    val timeout = processorTimeout match {
-      case f: FiniteDuration if f > Duration.Zero => f
-      case _ => Pipeline.DefaultTimeout
-    }
+    launch(stream, "graft-micro-batch", pollInterval, processorTimeout, availableNow,
+      checkpoint) { (ctx, df, _) => BatchPolicy.run(ctx, processor, finalizer, df) }
+  }
+
+  /** The writer both entry points share: trigger (`ProcessingTime`
+    * poll clock or `AvailableNow` drain), query name, optional
+    * checkpoint, and a fresh deadline context per micro-batch.
+    */
+  private def launch(
+      stream: DataFrame, name: String, pollInterval: FiniteDuration,
+      processorTimeout: Duration, availableNow: Boolean, checkpoint: Option[String])(
+      batch: (BatchContext, DataFrame, Long) => Unit): StreamingQuery = {
+    val timeout = BatchPolicy.timeout(processorTimeout)
     val trigger =
       if (availableNow) Trigger.AvailableNow()
       else Trigger.ProcessingTime(pollInterval.toMillis)
-    val base = stream.writeStream
-      .queryName("graft-micro-batch")
-      .trigger(trigger)
-    checkpoint.foreach(base.option("checkpointLocation", _))
-    base
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val deadline = System.nanoTime() + timeout.toNanos
-        val ctx = new BatchContext {
-          def isExpired: Boolean = System.nanoTime() > deadline
-          def deadlineNanos: Long = deadline
-        }
-        val result =
-          try processor(ctx, df)
-          catch { case NonFatal(e) => Failure(e) }
-        result match {
-          case Success(out) if ctx.isExpired =>
-            safeFinalize(finalizer, Some(out), Some(new TimeoutException("context canceled")))
-          case Success(out) => safeFinalize(finalizer, Some(out), None)
-          case Failure(e)   => safeFinalize(finalizer, None, Some(e))
-        }
+    val writer = stream.writeStream.queryName(name).trigger(trigger)
+    checkpoint.foreach(writer.option("checkpointLocation", _))
+    writer
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        batch(BatchPolicy.context(timeout), df, batchId)
       }
       .start()
   }
-
-  private def safeFinalize(
-      f: (Option[DataFrame], Option[Throwable]) => Unit,
-      p: Option[DataFrame], e: Option[Throwable]): Unit =
-    try f(p, e) catch { case NonFatal(_) => () }
 
   /** Idempotent batch commit: append `out` to a parquet table such
     * that replaying the SAME `batchId` — which Structured Streaming's
@@ -145,8 +133,9 @@ object MicroBatch {
     * contract — so a processor failure here FAILS the query, and the
     * restart replays the batch from the write-ahead log into
     * [[exactlyOnceParquetAppend]], whose commit log de-duplicates the
-    * replay. MicroBatchSpec pins the crash-replay/no-duplicate
-    * contract.
+    * replay. So it shares only the writer and the deadline context
+    * with [[start]]: no panic recovery, no timeout substitution.
+    * MicroBatchSpec pins the crash-replay/no-duplicate contract.
     */
   def startExactlyOnce(
       stream: DataFrame,
@@ -158,31 +147,13 @@ object MicroBatch {
       availableNow: Boolean = false,
       checkpoint: Option[String] = None): StreamingQuery = {
     require(processor != null, "invalid processor")
-    val timeout = processorTimeout match {
-      case f: FiniteDuration if f > Duration.Zero => f
-      case _ => Pipeline.DefaultTimeout
-    }
-    val trigger =
-      if (availableNow) Trigger.AvailableNow()
-      else Trigger.ProcessingTime(pollInterval.toMillis)
-    val base = stream.writeStream
-      .queryName("graft-micro-batch-eo")
-      .trigger(trigger)
-    checkpoint.foreach(base.option("checkpointLocation", _))
-    base
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val deadline = System.nanoTime() + timeout.toNanos
-        val ctx = new BatchContext {
-          def isExpired: Boolean = System.nanoTime() > deadline
-          def deadlineNanos: Long = deadline
-        }
-        processor(ctx, df) match {
-          case Success(out) => exactlyOnceParquetAppend(out, batchId, dataDir, logDir)
-          case Failure(e)   => throw e // fail the query: WAL replays the batch
-        }
-        ()
+    launch(stream, "graft-micro-batch-eo", pollInterval, processorTimeout, availableNow,
+      checkpoint) { (ctx, df, batchId) =>
+      processor(ctx, df) match {
+        case Success(out) => exactlyOnceParquetAppend(out, batchId, dataDir, logDir)
+        case Failure(e)   => throw e // fail the query: WAL replays the batch
       }
-      .start()
+    }
   }
 
   /** Graceful drain: the in-flight micro-batch completes before stop

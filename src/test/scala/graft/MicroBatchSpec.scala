@@ -20,11 +20,13 @@ class MicroBatchSpec extends AnyFunSuite {
       spark.readStream.format("rate").option("rowsPerSecond", "50").load(),
       processor = (_, df) => Success(df.selectExpr("value * 2 AS doubled")),
       finalizer = (p, e) => {
-        assert(e.isEmpty)
+        assert(e.isEmpty) // a spurious timeout skips the count below
         p.foreach(df => rows.addAndGet(df.count().toInt))
         batches.incrementAndGet()
       },
-      pollInterval = 100.millis)
+      pollInterval = 100.millis,
+      // non-positive → DefaultTimeout, as on the facade: no spurious timeout
+      processorTimeout = Duration.Zero)
     val deadline = System.currentTimeMillis() + 15000
     while (batches.get() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
     MicroBatch.stopGracefully(q)
@@ -356,7 +358,12 @@ class MicroBatchSpec extends AnyFunSuite {
       processor = (_, df) =>
         if (n.getAndIncrement() == 0) Failure(new RuntimeException("batch boom"))
         else Success(df),
-      finalizer = (_, e) => if (e.isDefined) errs.incrementAndGet() else oks.incrementAndGet(),
+      finalizer = (_, e) =>
+        if (e.isDefined) {
+          errs.incrementAndGet()
+          // a throwing finalizer must not stop the stream either
+          throw new IllegalStateException("finalizer boom")
+        } else oks.incrementAndGet(),
       pollInterval = 100.millis)
     val deadline = System.currentTimeMillis() + 15000
     while ((errs.get() < 1 || oks.get() < 1) && System.currentTimeMillis() < deadline)

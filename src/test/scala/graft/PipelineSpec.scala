@@ -216,4 +216,20 @@ class PipelineSpec extends AnyFunSuite {
     p.tryProcessBatch()
     eventually(sawExpired.get() == 1)
   }
+
+  // finalizer isolation (shared with MicroBatch through BatchPolicy)
+  test("a throwing finalizer neither stops the facade nor skips the next batch's finalize") {
+    val fin = new RecFinalizer
+    val batches = Iterator(ok("a"), ok("b")) ++ Iterator.continually(ok[String]())
+    val p = Pipeline[String](1, () => batches.next(), noop)
+      .withFinalizer { (b, e) =>
+        fin.fn(b, e)
+        if (fin.count == 1) throw new IllegalStateException("finalizer boom")
+      }
+      .withNoBatchSleep(1.millis)
+    p.start()
+    eventually(fin.count == 2)
+    p.stop()
+    assert(fin.calls.toSeq == Seq((Some(Seq("a")), None), (Some(Seq("b")), None)))
+  }
 }
