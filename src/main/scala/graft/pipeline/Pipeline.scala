@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-import java.util.concurrent.{Executors, ThreadFactory}
+import java.util.concurrent.locks.LockSupport
+import java.util.concurrent.{ExecutorService, Executors, ThreadFactory}
 import scala.concurrent.duration._
 import scala.util.control.NonFatal
 import scala.util.{Failure, Success, Try}
@@ -38,15 +39,19 @@ object Pipeline {
   *    exception isolation live in [[BatchPolicy]], the one per-batch
   *    policy this facade shares with `graft.streaming.MicroBatch`
   *  - `stop()` blocks until in-flight workers drain (10 ms poll,
-  *    `:86-97`); a batch fetched during shutdown is dropped
-  *    unprocessed (`:137-140`); `start()` after `stop()` is a no-op
+  *    `:86-97`), then shuts the worker pool down; a batch fetched
+  *    during shutdown is dropped unprocessed (`:137-140`), never run
+  *    after `stop()` returns; `start()` after `stop()` is a no-op
   *    (`:100-102`)
   *
   * Deliberate non-ports: the reference's 50 ms post-spawn sleep
   * (`:142-143`) patched a counter race — here the in-flight counter is
-  * incremented synchronously before submit, so the race doesn't exist;
-  * and the dispatcher parks 1 ms between sweeps instead of busy-
-  * spinning when the pool is full.
+  * incremented synchronously before submit, so the race doesn't exist.
+  * The reference's dispatcher spins hot; this one blocks while the pool
+  * is full and is woken by the worker that frees a slot, sweeps again
+  * at once after a sweep that dispatched, and pauses 1 ms only after a
+  * sweep that fetched nothing (every poll empty or failed), so an idle
+  * or failing source is polled about `maxConcurrentBatches` times per ms.
   *
   * Spark usage: the processor closure runs on the driver and is free
   * to submit Spark jobs (`spark.read...` / DataFrame actions) per
@@ -70,12 +75,24 @@ final class Pipeline[T] private (
   private val inFlight = new AtomicInteger(0)
   private val stopRequested = new AtomicBoolean(false)
   private val started = new AtomicBoolean(false)
+  /** Set by `start()`; a worker freeing a slot unparks it. */
+  @volatile private var dispatcher: Thread = null
+  private[graft] def dispatcherThread: Option[Thread] = Option(dispatcher)
 
-  private lazy val workers = Executors.newCachedThreadPool(new ThreadFactory {
-    def newThread(r: Runnable): Thread = {
-      val t = new Thread(r, "graft-pipeline-worker"); t.setDaemon(true); t
-    }
-  })
+  /** Created on first dispatch, so fluent copies spawn no pool. */
+  @volatile private var poolCreated = false
+  private lazy val workers = {
+    poolCreated = true
+    Executors.newCachedThreadPool(new ThreadFactory {
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, "graft-pipeline-worker"); t.setDaemon(true); t
+      }
+    })
+  }
+
+  /** The worker pool, if one was ever created. */
+  private[graft] def workerPool: Option[ExecutorService] =
+    if (poolCreated) Some(workers) else None
 
   /** Fluent config, mirroring `WithFinalizer` (`batch_processor.go:63-66`). */
   def withFinalizer(f: (Option[Seq[T]], Option[Throwable]) => Unit): Pipeline[T] =
@@ -93,15 +110,17 @@ final class Pipeline[T] private (
       BatchPolicy.timeout(d))
 
   /** One dispatch sweep: fetch and dispatch up to the number of free
-    * worker slots (`tryProcessBatch`, `batch_processor.go:115-145`).
-    * Package-visible so behavioral tests can drive sweeps directly,
-    * exactly as the reference's tests do.
+    * worker slots (`tryProcessBatch`, `batch_processor.go:115-145`);
+    * returns the number of batches dispatched. Package-visible so
+    * behavioral tests can drive sweeps directly, exactly as the
+    * reference's tests do.
     */
-  private[graft] def tryProcessBatch(): Unit = {
+  private[graft] def tryProcessBatch(): Int = {
     val available = maxConcurrentBatches - inFlight.get()
+    var dispatched = 0
     var i = 0
     while (i < available) {
-      if (stopRequested.get()) return
+      if (stopRequested.get()) return dispatched
       supplier() match {
         case Failure(_) =>
           // supplier error: skip, no retry, keep sweeping (:127-130)
@@ -110,13 +129,25 @@ final class Pipeline[T] private (
           // empty source: back off, keep sweeping (:131-136)
           if (noBatchSleep > Duration.Zero) Thread.sleep(noBatchSleep.toMillis)
         case Success(batch) =>
-          if (stopRequested.get()) return // fetched during shutdown → dropped (:137-140)
+          // Take the slot before checking for shutdown: either stop()
+          // sees it and waits for the batch, or the batch sees stop()
+          // and is dropped (:137-140) — never run after stop() returns.
           inFlight.incrementAndGet()
-          try workers.submit(new Runnable { def run(): Unit = runBatch(batch) })
-          catch { case NonFatal(_) => inFlight.decrementAndGet() }
+          if (stopRequested.get()) { release(); return dispatched }
+          try {
+            workers.submit(new Runnable { def run(): Unit = runBatch(batch) })
+            dispatched += 1
+          } catch { case NonFatal(_) => release() }
       }
       i += 1
     }
+    dispatched
+  }
+
+  /** Free a worker slot and wake the dispatcher if it waits for one. */
+  private def release(): Unit = {
+    inFlight.decrementAndGet()
+    LockSupport.unpark(dispatcher)
   }
 
   /** Worker body: the shared per-batch policy ([[BatchPolicy.run]]),
@@ -124,29 +155,37 @@ final class Pipeline[T] private (
     */
   private def runBatch(batch: Seq[T]): Unit =
     try BatchPolicy.run(BatchPolicy.context(processorTimeout), processor, finalizer, batch)
-    finally inFlight.decrementAndGet()
+    finally release()
 
   /** Spawn the dispatcher loop (`Start`, `batch_processor.go:99-113`).
-    * No-op once `stop()` has been requested (`:100-102`).
+    * No-op once `stop()` has been requested (`:100-102`). While the
+    * pool is full the dispatcher parks until `release()` or `stop()`
+    * unparks it; after a sweep that dispatched it sweeps again at once;
+    * after a sweep that fetched nothing it pauses 1 ms instead of the
+    * reference's hot spin.
     */
   def start(): Unit = {
     if (stopRequested.get() || !started.compareAndSet(false, true)) return
-    val dispatcher = new Thread("graft-pipeline-dispatcher") {
+    val t = new Thread("graft-pipeline-dispatcher") {
       override def run(): Unit =
         while (!stopRequested.get()) {
-          tryProcessBatch()
-          Thread.sleep(1) // park instead of the reference's hot spin
+          if (inFlight.get() >= maxConcurrentBatches) LockSupport.park(this)
+          else if (tryProcessBatch() == 0) Thread.sleep(1)
         }
     }
-    dispatcher.setDaemon(true)
-    dispatcher.start()
+    t.setDaemon(true)
+    dispatcher = t
+    t.start()
   }
 
   /** Graceful stop: no new dispatches; blocks until in-flight batches
-    * finish (10 ms drain poll, `batch_processor.go:86-97`).
+    * finish (10 ms drain poll, `batch_processor.go:86-97`), then shuts
+    * the worker pool down if one was created.
     */
   def stop(): Unit = {
     stopRequested.set(true)
+    LockSupport.unpark(dispatcher)
     while (inFlight.get() > 0) Thread.sleep(10)
+    if (poolCreated) workers.shutdown()
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
 import graft.pipeline.{BatchContext, Pipeline}
+import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.AtomicInteger
-import java.util.concurrent.{CountDownLatch, TimeUnit, TimeoutException}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit, TimeoutException}
 import scala.collection.mutable
 import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
@@ -231,5 +232,78 @@ class PipelineSpec extends AnyFunSuite {
     eventually(fin.count == 2)
     p.stop()
     assert(fin.calls.toSeq == Seq((Some(Seq("a")), None), (Some(Seq("b")), None)))
+  }
+
+  // dispatcher: a freed slot wakes it, so a one-slot pool drains fast
+  test("a one-slot pool drains 2000 queued batches in under a second") {
+    val queue = new ConcurrentLinkedQueue[String]()
+    (1 to 2000).foreach(i => queue.add(i.toString))
+    val done = new CountDownLatch(2000)
+    val p = Pipeline[String](1, () => Option(queue.poll()).fold(ok[String]())(ok(_)), noop)
+      .withFinalizer((_, _) => done.countDown())
+      .withNoBatchSleep(1.millis)
+    val t0 = System.nanoTime()
+    p.start()
+    val drained = done.await(5, TimeUnit.SECONDS)
+    val tookMs = (System.nanoTime() - t0) / 1000000
+    p.stop()
+    assert(drained)
+    assert(tookMs < 1000, s"took $tookMs ms") // a 1 ms park after every sweep takes ≥ 2 s
+  }
+
+  // dispatcher: a full pool blocks it — no fetch and no spin
+  test("a full pool neither fetches nor spins while its batch is blocked") {
+    val fetches = new AtomicInteger(0)
+    val inProc = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val p = Pipeline[String](1,
+      () => { fetches.incrementAndGet(); ok("m") },
+      (_, b) => { inProc.countDown(); release.await(2, TimeUnit.SECONDS); Success(b) })
+      .withNoBatchSleep(0.millis)
+    p.start()
+    assert(inProc.await(2, TimeUnit.SECONDS))
+    val cpu = ManagementFactory.getThreadMXBean
+    val dispatcherId = p.dispatcherThread.get.getId
+    val fetchesBefore = fetches.get()
+    val cpuBefore = cpu.getThreadCpuTime(dispatcherId)
+    Thread.sleep(200)
+    val spentMs = (cpu.getThreadCpuTime(dispatcherId) - cpuBefore) / 1000000
+    val fetchesAfter = fetches.get()
+    release.countDown()
+    p.stop()
+    assert(fetchesAfter == fetchesBefore)
+    assert(spentMs < 20, s"dispatcher used $spentMs ms of CPU in 200 ms") // a spin uses ~200
+  }
+
+  // dispatcher: an empty or failing source is polled at most ~slots per ms
+  test("an idle or failing source is polled at about one sweep per ms") {
+    val sources = Seq[() => Try[Seq[String]]](() => ok(), () => Failure(new RuntimeException("down")))
+    sources.foreach { source =>
+      val calls = new AtomicInteger(0)
+      val p = Pipeline[String](4, () => { calls.incrementAndGet(); source() }, noop)
+        .withNoBatchSleep(0.millis)
+      val t0 = System.nanoTime()
+      p.start()
+      Thread.sleep(300)
+      p.stop()
+      val elapsedMs = (System.nanoTime() - t0) / 1000000
+      assert(calls.get() > 0)
+      assert(calls.get() < 2 * 4 * elapsedMs, s"${calls.get()} calls in $elapsedMs ms")
+    }
+  }
+
+  // stop() releases the worker pool; an unused fluent base never makes one
+  test("stop shuts down the worker pool; fluent copies spawn none") {
+    val fin = new RecFinalizer
+    val batches = Iterator(ok("a")) ++ Iterator.continually(ok[String]())
+    val base = Pipeline[String](2, () => batches.next(), noop)
+    val p = base.withFinalizer(fin.fn).withNoBatchSleep(1.millis)
+    assert(p.workerPool.isEmpty)
+    p.start()
+    eventually(fin.count == 1)
+    p.stop()
+    assert(p.workerPool.exists(_.isShutdown))
+    assert(p.workerPool.exists(_.awaitTermination(2, TimeUnit.SECONDS)))
+    assert(base.workerPool.isEmpty)
   }
 }
