@@ -60,7 +60,7 @@ object Bench {
         .sortBy { case (_, r) => -r })
   }
 
-  /** Clears the four cross-query memos once per ROUND. Within a round
+  /** Clears the cross-query memos once per ROUND. Within a round
     * queries legitimately share them (the operators' documented
     * design): q_dedup_clusters reuses q_dedup_minhash's checkpointed
     * pairs, q_dedup_embedding/q_ann_lsh share the signed corpus, the
@@ -69,12 +69,7 @@ object Bench {
     * segment-labeled order fact. Across rounds each round re-pays them,
     * so medians time the real work, not a warm checkpoint read.
     */
-  private[graft] def clearMemos(): Unit = {
-    ops.Dedup.clearPairsMemo()
-    ops.Similarity.clearSignedMemo()
-    ops.Graph.clearGraphMemo()
-    ops.SegOrders.clear()
-  }
+  private[graft] def clearMemos(): Unit = ops.DatasetMemo.clearAll()
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

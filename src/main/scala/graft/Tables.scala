@@ -46,9 +46,21 @@ object Tables {
     * from one corpus (e.g. the AllPairs join's five shingle passes)
     * now share the ONE fanned exchange via Spark's exchange reuse
     * instead of re-running the single-core scan chain per frame.
-    * The probe is PASSIVE — split counts come from the planned
-    * FileSourceScanExec (driver-side file-split enumeration, no job;
-    * the [[graft.ops.TextAnalysis.docFingerprint]] guard's rules).
+    *
+    * The probe is PASSIVE: the obvious `queryExecution.toRdd
+    * .getNumPartitions` goes through `AdaptiveSparkPlanExec.doExecute`,
+    * which under AQE runs every upstream shuffle stage as real jobs at
+    * DataFrame-CONSTRUCTION time (double work the final query repeats)
+    * and throws on a streaming input. So only a plan with no Exchange
+    * (the one shape where the scan split count IS the job's
+    * parallelism; anything downstream of a shuffle is already
+    * `spark.sql.shuffle.partitions` wide) is probed, and its split
+    * count is read from the planned FileSourceScanExec — driver-side
+    * file-split enumeration, no job. `cores` is floored by the shuffle
+    * width alongside `defaultParallelism`: under dynamic allocation (or
+    * before executors register) the latter can report the driver's
+    * local slots, which would mute the probe and size the fan-out too
+    * narrow.
     */
   private[graft] def spreadScan(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df

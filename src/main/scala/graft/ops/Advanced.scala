@@ -583,10 +583,9 @@ object Advanced {
     // the ONLY corpus-sized work, materialized once: the lazy plan
     // embeds `daily` six times (calendar span, type list, zero-fill,
     // × both pair sides), which would re-run the events aggregate 6×
-    val daily = events
+    val daily = Cached.checkpoint(events
       .groupBy(col(typeCol).as("t"), to_date(col(tsCol)).as("day"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("n")))
     val cal = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(explode(expr("sequence(d0, d1)")).as("day"))
     val grid = daily.select(col("t")).distinct()

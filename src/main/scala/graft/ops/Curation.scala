@@ -150,7 +150,7 @@ object Curation {
     // inlining split(text) into the lambda would re-split the document
     // for every shingle (Catalyst keeps the alias: non-cheap exprs with
     // multiple references are not collapsed into consumers)
-    val shingled0 = docs.select(col("doc_id"), toks.as("tk"))
+    val shingled = docs.select(col("doc_id"), toks.as("tk"))
       .select(col("doc_id"),
         expr(s"""CASE WHEN size(tk) >= $ShingleN
                 |  THEN array_distinct(transform(
@@ -159,18 +159,16 @@ object Curation {
                 |  ELSE array() END""".stripMargin).as("sh"))
     // both sides derive from one shingling pass; the persisted frame is
     // dropped after the SMALL per-doc hit counts are checkpointed
-    val shingled = if (materialize) shingled0.persist() else shingled0
-    val hitsM = try {
+    val hitsM = Cached(materialize).derive(shingled) {
       val corpusSh = shingled.filter(!benchPred)
         .select(col("doc_id"), explode(col("sh")).as("h"))
       // the benchmark shingle set is small and fixed (the eval suites) —
       // broadcast it so the corpus side never shuffles
       val benchSh = shingled.filter(benchPred)
         .select(explode(col("sh")).as("h")).distinct()
-      val hits = corpusSh.join(broadcast(benchSh), Seq("h"))
+      corpusSh.join(broadcast(benchSh), Seq("h"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contaminated"))
-      if (materialize) hits.localCheckpoint(true) else hits
-    } finally if (materialize) shingled.unpersist()
+    }
     docs.filter(!benchPred)
       .select(col("doc_id"))
       .join(hitsM, Seq("doc_id"), "left")
@@ -232,8 +230,7 @@ object Curation {
            |  i -> named_struct('pos', i + 1,
            |    'h', md5(concat_ws(' ', slice(tk, i + 1, $ShingleN)))))""".stripMargin)
         .as("sh"))
-      .persist()
-    val hits = try {
+    val hits = Cached.derive(base) {
       val corpus = base.filter(!benchPred)
         .select(col("doc_id"), explode(col("sh")).as("u"))
         .select(col("doc_id"), col("u.pos").as("pos"), col("u.h").as("h"))
@@ -248,8 +245,7 @@ object Curation {
           expr("""array_join(transform(
                  |  slice(array_sort(collect_list(pos)), 1, 8),
                  |  x -> cast(x AS string)), ',')""".stripMargin).as("pos_csv"))
-        .localCheckpoint(true)
-    } finally base.unpersist()
+    }
     docs.filter(!benchPred).select(col("doc_id"))
       .join(hits, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_hits", "first_pos", "last_pos"))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * defeats the ContextCleaner's GC-driven cleanup, which handles every
   * non-memoized checkpoint.
   */
-private[ops] object DatasetMemo {
+private[graft] object DatasetMemo {
   /** ALL memo computations (across every [[DatasetMemo]] instance)
     * serialize on this one lock: [[DatasetMemo.getOrCompute]] attributes
     * every RDD persisted on the SparkContext during `compute` to the new
@@ -32,11 +32,20 @@ private[ops] object DatasetMemo {
     * (they recompute, never corrupt).
     */
   private val computeLock = new Object
+
+  /** Every memo constructed in this JVM, so one call resets them all. */
+  private val instances = new java.util.concurrent.ConcurrentLinkedQueue[DatasetMemo]()
+
+  /** Release every entry of every memo — the per-round reset of the
+    * bench and the profiler, which then cannot miss a new memo owner.
+    */
+  private[graft] def clearAll(): Unit = instances.forEach(_.clear())
 }
 
 private[ops] final class DatasetMemo(tableFile: String) {
   private val memo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), (String, DataFrame, Set[Int])]
+  DatasetMemo.instances.add(this)
 
   /** Cheap fingerprint of `dir`/`tableFile`: part names, sizes, mtimes.
     * `private[ops]` so index-freshness guards ([[Similarity]]'s stored

@@ -806,36 +806,32 @@ object Dedup {
     // Jaccard's lang × length-bucket) have FEW, HUGE buckets, and a
     // window would funnel each whole bucket through one task — the agg
     // combines map-side and the join back is keyed and AQE-skew-safe
-    val sizes0 = buckets.groupBy(col("bucket_id"), col("bucket_hash"))
+    val sizes = buckets.groupBy(col("bucket_id"), col("bucket_hash"))
       .agg(count(lit(1)).as("bsz"))
     // persisted only when read twice (cap filter + dropped detection);
     // small: one row per bucket
-    val sizes = if (materialize && withDropped) sizes0.persist() else sizes0
-    try {
+    Cached(materialize && withDropped).hold(sizes) {
       val keep = sizes.filter(col("bsz") <= maxBucket)
         .select(col("bucket_id"), col("bucket_hash"))
-      val capped0 = buckets
+      val capped = buckets
         .join(keep, Seq("bucket_id", "bucket_hash"))
         .select(col("bucket_id"), col("bucket_hash"), col("doc_id"))
-      val capped = if (materialize) capped0.persist() else capped0
-      val pairs = try {
-        val p = capped.as("x").join(capped.as("y"),
+      val pairs = Cached(materialize).derive(capped) {
+        capped.as("x").join(capped.as("y"),
             col("x.bucket_id") === col("y.bucket_id") &&
             col("x.bucket_hash") === col("y.bucket_hash") &&
             col("x.doc_id") < col("y.doc_id"))
           .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
           .distinct()
-        if (materialize) p.localCheckpoint(true) else p
-      } finally if (materialize) capped.unpersist()
+      }
       val dropped = if (!withDropped) null else {
         val over = sizes.filter(col("bsz") > maxBucket)
           .select(col("bucket_id"), col("bucket_hash"))
-        val d = buckets.join(over, Seq("bucket_id", "bucket_hash"))
-          .select(col("doc_id")).distinct()
-        if (materialize) d.localCheckpoint(true) else d
+        Cached(materialize).checkpoint(
+          buckets.join(over, Seq("bucket_id", "bucket_hash")).select(col("doc_id")).distinct())
       }
       (pairs, dropped)
-    } finally if (materialize && withDropped) sizes.unpersist()
+    }
   }
 
   /** Left-join a per-doc pair summary back onto the full doc list so the
@@ -938,16 +934,13 @@ object Dedup {
     */
   def minhashVerifiedPairs(docs: DataFrame, idCol: String, textCol: String,
                            materialize: Boolean): DataFrame = {
-    val sets0 = shingleSets(docs, idCol, textCol)
-    val sets = if (materialize) sets0.persist() else sets0
-    try {
-      val cand = lshCandidates(minhashBandBuckets(sets), maxBucket = 100, materialize)
-      val verified = cand
+    val sets = shingleSets(docs, idCol, textCol)
+    Cached(materialize).derive(sets) {
+      lshCandidates(minhashBandBuckets(sets), maxBucket = 100, materialize)
         .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), Seq("doc_a"))
         .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), Seq("doc_b"))
         .select(col("doc_a"), col("doc_b"), jaccard(col("sa"), col("sb")).as("jacc"))
-      if (materialize) verified.localCheckpoint(true) else verified
-    } finally if (materialize) sets.unpersist()
+    }
   }
 
   /** MinHash calibration report — the near-dup family's analogue of
@@ -981,8 +974,7 @@ object Dedup {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val sets = shingleSets(docs, idCol, textCol)
       .withColumn("sig", expr("minhash_mod64(shset, 64)"))
-      .persist()
-    try {
+    Cached.derive(sets) {
       val cand = lshCandidates(minhashBandBuckets(sets), maxBucket = 100,
         materialize = true)
       val scored = cand
@@ -1002,11 +994,8 @@ object Dedup {
           expr("sum(est_bp) div count(1)").as("avg_est_bp"),
           expr("sum(exact_bp) div count(1)").as("avg_exact_bp"),
           expr("sum(abs_err) div count(1)").as("avg_abs_err_bp"))
-        .orderBy(col("decile"))
-        // ≤10-row grid: materialize while `sets` is still cached, or the
-        // unpersist below silently turns the cache into a double recompute
-        .localCheckpoint(true)
-    } finally sets.unpersist()
+        .orderBy(col("decile")) // ≤10-row grid
+    }
   }
 
   /** Shared DuckDB CTE chain rebuilding the engine-neutral MinHash-LSH
@@ -1284,11 +1273,11 @@ object Dedup {
                            idCol: String, textCol: String,
                            tau: Double): DataFrame = {
     require(tau > 0 && tau <= 1, s"dedupIncrementalNear: bad tau=$tau")
-    val oldSets = shingleSets(oldDocs, idCol, textCol).persist()
-    val newSets = shingleSets(newDocs, idCol, textCol).persist()
-    val oldB = minhashBandBuckets(oldSets).persist()
-    val newB = minhashBandBuckets(newSets).persist()
-    try {
+    val oldSets = shingleSets(oldDocs, idCol, textCol)
+    val newSets = shingleSets(newDocs, idCol, textCol)
+    val oldB = minhashBandBuckets(oldSets)
+    val newB = minhashBandBuckets(newSets)
+    Cached.derive(oldSets, newSets, oldB, newB) {
       // bucket caps on BOTH probe sides, computed like lshCandidates':
       // agg + keyed join, never a window over the bucket key
       def keepSmall(b: DataFrame): DataFrame =
@@ -1323,11 +1312,7 @@ object Dedup {
           when(col("of_index"), "near_dup_of_index")
             .when(col("in_increment"), "near_dup_in_increment")
             .otherwise("new").as("status"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true) // small: one (id, status) row per new doc
-    } finally {
-      oldB.unpersist(); newB.unpersist()
-      oldSets.unpersist(); newSets.unpersist()
+        .orderBy(col("doc_id")) // small: one (id, status) row per new doc
     }
   }
 
@@ -1398,10 +1383,8 @@ object Dedup {
                                    tau: Double, materialize: Boolean,
                                    ngram: Int = 3): DataFrame = {
     require(tau > 0 && tau <= 1, s"containmentPairs: bad tau=$tau")
-    val sets0 = shingleSets(docs, idCol, textCol, ngram)
-    val sets = if (materialize) sets0.persist() else sets0
-    var censusCache: Option[DataFrame] = None
-    try {
+    val sets = shingleSets(docs, idCol, textCol, ngram)
+    Cached(materialize).hold(sets) {
       // probe side: bottom-k smallest shingle hashes per doc (k rows/doc)
       val probes = sets.select(col("doc_id"),
         explode(slice(array_sort(col("shset")), 1, ContainBottomK)).as("sh"))
@@ -1409,65 +1392,61 @@ object Dedup {
       // lists capped by document frequency (agg + keyed join — the
       // lshCandidates cap discipline, never a window)
       val inv = sets.select(col("doc_id").as("doc_o"), explode(col("shset")).as("sh"))
-      val census0 = inv.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      val census = if (materialize) {
-        val c = census0.persist(); censusCache = Some(c); c
-      } else census0
-      if (materialize) {
-        // Probe-coverage pre-flight (first observed at gen-sf3: a
-        // 31-word token pool fully saturates the 3-gram space, every
-        // posting list exceeds the df cap, and the operator silently
-        // returned 0 pairs at 0 recall). A probe only finds its
-        // containing document if its shingle survives the cap, so
-        // kept_mass/mass IS the per-probe hit probability — when it
-        // collapses, the bottom-k guarantee ((1−tau·cov)^k misses) is
-        // void and running the join would be silent garbage. Refuse
-        // loudly instead; the figures come from the census the join
-        // needs anyway.
-        val r = census.agg(
-          coalesce(sum(col("df")), lit(0L)).as("mass"),
-          coalesce(sum(when(col("df") <= ContainPostingCap, col("df"))
-            .otherwise(lit(0L))), lit(0L)).as("kept")).head()
-        val (mass, kept) = (r.getLong(0), r.getLong(1))
-        val covMilli = if (mass == 0L) 1000L else kept * 1000L / mass
-        require(covMilli >= ContainMinCoverageMilli,
-          s"containmentPairs: only $covMilli/1000 of shingle mass survives " +
-            s"the df<=$ContainPostingCap posting cap ($kept of $mass rows) — " +
-            "the corpus has saturated its shingle vocabulary (boilerplate-" +
-            "heavy or tiny token pool), so bottom-k probes cannot reach the " +
-            "index and containment recall silently collapses; run " +
-            "containmentProfile for the census, widen the shingle (the " +
-            s"ngram overload — ${ngram + 2} words per gram grows the space " +
-            "exponentially), or fall back to substringDedup/exact dedup " +
-            "on this corpus")
+      val census = inv.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+      // small: flagged pairs only — the checkpoint frees the sets +
+      // census caches
+      Cached(materialize).derive(census) {
+        if (materialize) {
+          // Probe-coverage pre-flight (first observed at gen-sf3: a
+          // 31-word token pool fully saturates the 3-gram space, every
+          // posting list exceeds the df cap, and the operator silently
+          // returned 0 pairs at 0 recall). A probe only finds its
+          // containing document if its shingle survives the cap, so
+          // kept_mass/mass IS the per-probe hit probability — when it
+          // collapses, the bottom-k guarantee ((1−tau·cov)^k misses) is
+          // void and running the join would be silent garbage. Refuse
+          // loudly instead; the figures come from the census the join
+          // needs anyway.
+          val r = census.agg(
+            coalesce(sum(col("df")), lit(0L)).as("mass"),
+            coalesce(sum(when(col("df") <= ContainPostingCap, col("df"))
+              .otherwise(lit(0L))), lit(0L)).as("kept")).head()
+          val (mass, kept) = (r.getLong(0), r.getLong(1))
+          val covMilli = if (mass == 0L) 1000L else kept * 1000L / mass
+          require(covMilli >= ContainMinCoverageMilli,
+            s"containmentPairs: only $covMilli/1000 of shingle mass survives " +
+              s"the df<=$ContainPostingCap posting cap ($kept of $mass rows) — " +
+              "the corpus has saturated its shingle vocabulary (boilerplate-" +
+              "heavy or tiny token pool), so bottom-k probes cannot reach the " +
+              "index and containment recall silently collapses; run " +
+              "containmentProfile for the census, widen the shingle (the " +
+              s"ngram overload — ${ngram + 2} words per gram grows the space " +
+              "exponentially), or fall back to substringDedup/exact dedup " +
+              "on this corpus")
+        }
+        val keep = census.filter(col("df") <= ContainPostingCap)
+          .select(col("sh"))
+        val cand = probes
+          .join(keep, Seq("sh"))
+          .join(inv, Seq("sh"))
+          .filter(col("doc_id") =!= col("doc_o"))
+          .select(least(col("doc_id"), col("doc_o")).as("doc_a"),
+            greatest(col("doc_id"), col("doc_o")).as("doc_b"))
+          .distinct()
+        cand
+          .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), Seq("doc_a"))
+          .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), Seq("doc_b"))
+          .select(col("doc_a"), col("doc_b"),
+            call_function("set_intersect_count", col("sa"), col("sb")).as("n_common"),
+            size(col("sa")).cast("long").as("n_a"),
+            size(col("sb")).cast("long").as("n_b"))
+          .withColumn("containment",
+            round(col("n_common").cast("double") / least(col("n_a"), col("n_b")), 4))
+          .withColumn("jacc", round(col("n_common").cast("double") /
+            (col("n_a") + col("n_b") - col("n_common")), 4))
+          .filter(col("containment") >= tau)
+          .orderBy(col("doc_a"), col("doc_b"))
       }
-      val keep = census.filter(col("df") <= ContainPostingCap)
-        .select(col("sh"))
-      val cand = probes
-        .join(keep, Seq("sh"))
-        .join(inv, Seq("sh"))
-        .filter(col("doc_id") =!= col("doc_o"))
-        .select(least(col("doc_id"), col("doc_o")).as("doc_a"),
-          greatest(col("doc_id"), col("doc_o")).as("doc_b"))
-        .distinct()
-      val out = cand
-        .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), Seq("doc_a"))
-        .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          call_function("set_intersect_count", col("sa"), col("sb")).as("n_common"),
-          size(col("sa")).cast("long").as("n_a"),
-          size(col("sb")).cast("long").as("n_b"))
-        .withColumn("containment",
-          round(col("n_common").cast("double") / least(col("n_a"), col("n_b")), 4))
-        .withColumn("jacc", round(col("n_common").cast("double") /
-          (col("n_a") + col("n_b") - col("n_common")), 4))
-        .filter(col("containment") >= tau)
-        .orderBy(col("doc_a"), col("doc_b"))
-      // small: flagged pairs only — frees the sets + census caches
-      if (materialize) out.localCheckpoint(true) else out
-    } finally if (materialize) {
-      sets.unpersist()
-      censusCache.foreach(_.unpersist())
     }
   }
 
@@ -1523,8 +1502,8 @@ object Dedup {
             s"i -> concat_ws(' ', slice(tk, i + 1, $ngram)))"))
           .otherwise(array(concat_ws(" ", col("tk"))))).as("g"))
       .distinct()
-    val census = grams.groupBy(col("g")).agg(count(lit(1)).as("df")).persist()
-    try {
+    val census = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
+    Cached.derive(census) {
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       val figures = census.agg(
         coalesce(sum(col("df")), lit(0L)).as("shingle_rows"),
@@ -1539,10 +1518,8 @@ object Dedup {
           coalesce(col("hot_df"), lit(0L)).as("hot_df"),
           when(col("shingle_rows") === 0, lit(null).cast("long"))
             .otherwise(expr("kept_mass * 1000 DIV shingle_rows"))
-            .as("coverage_milli"))
-        // 1-row figure: materialize while `census` is still cached
-        .localCheckpoint(true)
-    } finally census.unpersist()
+            .as("coverage_milli")) // 1-row figure
+    }
   }
 
   /** DuckDB twin of [[containmentProfile]] — identical string 3-grams
@@ -1618,12 +1595,11 @@ object Dedup {
       val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(wh)) fs.delete(wh, true)
     }
-    val sets = shingleSets(Tables.documents(spark, dir), "doc_id", "text",
-      ngram).persist()
-    try {
+    val sets = shingleSets(Tables.documents(spark, dir), "doc_id", "text", ngram)
+    Cached.hold(sets) {
       val inv = sets.select(col("doc_id"), explode(col("shset")).as("sh"))
-      val census = inv.groupBy(col("sh")).agg(count(lit(1)).as("df")).persist()
-      try {
+      val census = inv.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+      Cached.hold(census) {
         val r = census.agg(
           coalesce(sum(col("df")), lit(0L)).as("mass"),
           coalesce(sum(when(col("df") <= ContainPostingCap, col("df"))
@@ -1657,8 +1633,8 @@ object Dedup {
           .toDF("corpus_dir", "corpus_version", "ngram", "coverage_milli")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .format("parquet").saveAsTable(s"${table}_meta")
-      } finally census.unpersist()
-    } finally sets.unpersist()
+      }
+    }
   }
 
   /** Classify an arriving increment against the stored containment
@@ -1690,8 +1666,9 @@ object Dedup {
     require(tau > 0 && tau <= 1, s"containmentFromIndex: bad tau=$tau")
     val meta = spark.table(s"${table}_meta").head()
     val ngram = meta.getAs[Int]("ngram")
-    val newSets = shingleSets(newDocs, idCol, textCol, ngram).persist()
-    try {
+    val newSets = shingleSets(newDocs, idCol, textCol, ngram)
+    // small: flagged pairs only — the checkpoint frees the increment cache
+    Cached.derive(newSets) {
       val storedSets = spark.table(s"${table}_shsets")
       val storedInv = spark.table(s"${table}_inv")
       val storedProbes = spark.table(s"${table}_probes")
@@ -1705,8 +1682,7 @@ object Dedup {
         .select(col("new_id"), col("doc_id").as("idx_id"))
       val c2 = storedProbes.join(newInv.join(newKeep, Seq("sh")), Seq("sh"))
         .select(col("new_id"), col("doc_id").as("idx_id"))
-      val cand = c1.union(c2).distinct()
-      val out = cand
+      c1.union(c2).distinct()
         .join(newSets.select(col("doc_id").as("new_id"), col("shset").as("sn")),
           Seq("new_id"))
         .join(storedSets.select(col("doc_id").as("idx_id"), col("shset").as("si")),
@@ -1721,9 +1697,7 @@ object Dedup {
           (col("n_new") + col("n_idx") - col("n_common")), 4))
         .filter(col("containment") >= tau)
         .orderBy(col("new_id"), col("idx_id"))
-      // small: flagged pairs only — frees the increment cache
-      out.localCheckpoint(true)
-    } finally newSets.unpersist()
+    }
   }
 
   /** Freshness-CHECKED form: requires the stored index's corpus stamp
@@ -1863,24 +1837,22 @@ object Dedup {
     // docs (the vast majority of a real corpus) are appended as
     // singleton clusters afterwards, so per-round work scales with the
     // duplicate-graph size, not the corpus size
-    val adj = pairs
+    val adj = Cached.checkpoint(pairs
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .unionByName(pairs.select(col("doc_a"), col("doc_a").as("doc_b"))) // self-loops
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_b"))) // (both ends)
-      .distinct()
-      .localCheckpoint(true)
-    var labels = adj.select(col("doc_a").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster"))
-      .localCheckpoint(true)
+      .distinct())
+    var labels = Cached.checkpoint(adj.select(col("doc_a").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("cluster")))
     var converged = false
     var round = 0
     while (!converged && round < 20) {
-      val next = adj
+      // materializes the round + cuts lineage
+      val next = Cached.checkpoint(adj
         .join(labels.select(col("doc_id").as("doc_b"), col("cluster")), Seq("doc_b"))
         .groupBy(col("doc_a")).agg(min(col("cluster")).as("cluster"))
         .select(col("doc_a").as("doc_id"), col("cluster"))
-        .join(labels.withColumnRenamed("cluster", "old"), Seq("doc_id"))
-        .localCheckpoint(true) // materializes the round + cuts lineage
+        .join(labels.withColumnRenamed("cluster", "old"), Seq("doc_id")))
       val changed = next.filter(col("cluster") =!= col("old")).count()
       labels = next.select(col("doc_id"), col("cluster"))
       converged = changed == 0
@@ -1920,34 +1892,31 @@ object Dedup {
   def dedupSimhash(docs: DataFrame, idCol: String, textCol: String,
                    materialize: Boolean): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val sk0 = docs
+    val sk = docs
       .select(col(idCol).as("doc_id"),
         expr(s"md5_hash64_each(split($textCol, ' '))").as("hs"))
       // native codegen'd signature: one fused tokens×64 loop
       .withColumn("simhash", expr("simhash64(hs)"))
       .select(col("doc_id"), col("simhash"))
-    val sk = if (materialize) sk0.persist() else sk0
-    try {
+    val verified = Cached(materialize).derive(sk) {
       val buckets = sk.select(col("doc_id"),
           posexplode(expr(
             "transform(sequence(0, 3), c -> shiftright(simhash, 16*c) & 65535)")))
         .withColumnRenamed("pos", "bucket_id")
         .withColumnRenamed("col", "bucket_hash")
-      val cand = lshCandidates(buckets, maxBucket = 100, materialize)
-      val verified0 = cand
+      lshCandidates(buckets, maxBucket = 100, materialize)
         .join(sk.select(col("doc_id").as("doc_a"), col("simhash").as("ha")), Seq("doc_a"))
         .join(sk.select(col("doc_id").as("doc_b"), col("simhash").as("hb")), Seq("doc_b"))
         // similarity in [0,1]: 1 − hamming/64, so the shared ≥-threshold
         // summary logic applies (hamming ≤ 3 ⇔ sim ≥ 0.953)
         .select(col("doc_a"), col("doc_b"),
           (lit(1.0) - expr("bit_count(ha ^ hb)") / lit(64.0)).as("sim"))
-      val verified = if (materialize) verified0.localCheckpoint(true) else verified0
-      // doc list from the raw corpus (column-pruned), NOT the signature
-      // frame — the per-doc summary must not recompute signatures after
-      // the cache is dropped
-      perDocSummary(docs.select(col(idCol).as("doc_id")),
-        verified, "sim", 1.0 - 3.0 / 64, roundSim = false)
-    } finally if (materialize) sk.unpersist()
+    }
+    // doc list from the raw corpus (column-pruned), NOT the signature
+    // frame — the per-doc summary must not recompute signatures after
+    // the cache is dropped
+    perDocSummary(docs.select(col(idCol).as("doc_id")),
+      verified, "sim", 1.0 - 3.0 / 64, roundSim = false)
   }
 
   /** DuckDB twin of [[dedupSimhash]] — per-token md5-lower-64 hashes,
@@ -2080,13 +2049,11 @@ object Dedup {
     // which upgrades this query from rows-only to a full hash-checked
     // oracle — the docFingerprint promotion precedent, here for the
     // whole near-dup pipeline (sketch, banding, verification).
-    val sets0 = docs.select(col(idCol).as("doc_id"),
+    val sets = docs.select(col(idCol).as("doc_id"),
       expr(s"md5_shingle_hash64(split($textCol, ' '), 3)").as("shset"),
       col(blockCol).as("lang"),
       expr(s"CAST($sizeCol DIV 50 AS INT)").as("lenb"))
-    val sets = if (materialize) sets0.persist() else sets0
-    try {
-      val meta = sets.select(col("doc_id"))
+    val (verified, droppedDocs) = Cached(materialize).hold(sets) {
       // one bucket per bottom-3 shingle hash: content grows the key
       // space; lang+length still restrict candidates to plausible
       // pairs. Bucket keys are plain strings (lang, lenb:hash) — an
@@ -2100,21 +2067,21 @@ object Dedup {
         col("doc_id"))
       val (cand, droppedDocs) =
         lshCandidatesWithDropped(buckets, maxBucket = 1000, materialize)
-      val verified0 = cand
+      (Cached(materialize).checkpoint(cand
         .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), Seq("doc_a"))
         .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"), jaccard(col("sa"), col("sb")).as("jacc"))
-      val verified = if (materialize) verified0.localCheckpoint(true) else verified0
-      // visibility half of the bucket cap: a capped LSH scheme that
-      // silently discards huge buckets reports zero duplicates for
-      // their members — flag them instead of letting recall collapse
-      // invisibly at scale
-      val dropped = droppedDocs.withColumn("in_dropped_bucket", lit(1))
-      perDocSummaryUnsorted(meta, verified, "jacc", 0.7)
-        .join(dropped, Seq("doc_id"), "left")
-        .na.fill(0, Seq("in_dropped_bucket"))
-        .orderBy(col("doc_id"))
-    } finally if (materialize) sets.unpersist()
+        .select(col("doc_a"), col("doc_b"), jaccard(col("sa"), col("sb")).as("jacc"))),
+        droppedDocs)
+    }
+    // visibility half of the bucket cap: a capped LSH scheme that
+    // silently discards huge buckets reports zero duplicates for
+    // their members — flag them instead of letting recall collapse
+    // invisibly at scale
+    val dropped = droppedDocs.withColumn("in_dropped_bucket", lit(1))
+    perDocSummaryUnsorted(sets.select(col("doc_id")), verified, "jacc", 0.7)
+      .join(dropped, Seq("doc_id"), "left")
+      .na.fill(0, Seq("in_dropped_bucket"))
+      .orderBy(col("doc_id"))
   }
 
   /** Shared DuckDB fragment: per-doc distinct 3-gram shingle hashes in
@@ -2276,7 +2243,7 @@ object Dedup {
     // eager cut for the same reasons as [[snmMultipass]]'s base: block
     // joins push isnotnull(substring(norm, …)) through the corpus
     // fan-out, re-running the regexp chain single-task per subtree copy
-    val base = snmBase(docs, idCol, textCol).localCheckpoint(true)
+    val base = Cached.checkpoint(snmBase(docs, idCol, textCol))
     val pairs = snmPairs(base, substring(col("norm"), 1, keyLen),
       window, blockLen)
     val perDoc = pairs.groupBy(col("b_id"))
@@ -2357,7 +2324,7 @@ object Dedup {
     // eager cut computes the chain once at the fanned width and makes
     // it un-pushable. Corpus-scale cost is one (doc_id, norm, toks)
     // materialization vs three recomputations of the regexp chain.
-    val base = snmBase(docs, idCol, textCol).localCheckpoint(true)
+    val base = Cached.checkpoint(snmBase(docs, idCol, textCol))
     val p1 = snmPairs(base, substring(col("norm"), 1, keyLen),
       window, blockLen)
     val p2 = snmPairs(base, substring(col("norm"), keyLen + 1, keyLen),
@@ -2583,8 +2550,8 @@ object Dedup {
     */
   def similarityJoinProfile(docs: DataFrame, idCol: String, textCol: String,
                             ngram: Int, tauMicro: Long): DataFrame = {
-    val sh = simJoinShingles(docs, idCol, textCol, ngram).persist()
-    try {
+    val sh = simJoinShingles(docs, idCol, textCol, ngram)
+    Cached.derive(sh) {
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       val shStats = sh.agg(count(lit(1)).as("shingle_rows"),
         countDistinct(col("s")).as("vocab"))
@@ -2594,16 +2561,13 @@ object Dedup {
         coalesce(sum(col("p")), lit(0L)).as("prefix_rows"),
         coalesce(sum(expr("p * (p - 1) DIV 2")), lit(0L)).as("cand_pairs"),
         coalesce(max(col("p")), lit(0L)).as("hot_posting"))
-      val out = nDocs.crossJoin(broadcast(shStats)).crossJoin(broadcast(candStats))
+      nDocs.crossJoin(broadcast(shStats)).crossJoin(broadcast(candStats))
         .select(col("n_docs"), col("shingle_rows"), col("vocab"),
           col("prefix_rows"), col("cand_pairs"), col("hot_posting"),
           when(col("n_docs") === 0, lit(null))
             .otherwise(expr("cand_pairs * 1000 DIV n_docs"))
-            .as("cand_per_doc_milli"))
-        // 1-row figure: materialize while `sh` is still cached
-        .localCheckpoint(true)
-      out
-    } finally sh.unpersist()
+            .as("cand_per_doc_milli")) // 1-row figure
+    }
   }
 
   /** DuckDB twin of [[similarityJoinProfile]] — the identical shingle

@@ -92,8 +92,7 @@ object Graph {
       .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
       .withColumn("outdeg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-      .persist()
-    try {
+    Cached.hold(adj) {
       val nodes = adj.select(col("src")).distinct()
       val n = nodes.count()
       require(n > 0, "pageRank: empty edge frame")
@@ -110,10 +109,10 @@ object Graph {
           .select(col("dst").as("node"),
             (lit(teleport) + expr("(85 * s) DIV 100")).as("pr"))
         if (i % checkpointEvery == 0 || i == iterations)
-          ranks = ranks.localCheckpoint(true) // materialize + cut lineage
+          ranks = Cached.checkpoint(ranks) // materialize + cut lineage
       }
       ranks
-    } finally adj.unpersist()
+    }
   }
 
   /** Per-customer supplier-basket cap for [[coPurchase]]: pair fan-out
@@ -160,7 +159,7 @@ object Graph {
                  k: Int = 20,
                  broadcastDegrees: Boolean = false,
                  materialize: Boolean = true): DataFrame = {
-    val ecols = edges.select(col(custCol).as("c"), col(itemCol).as("s")).persist()
+    val ecols = edges.select(col(custCol).as("c"), col(itemCol).as("s"))
     // cap BEFORE collecting: filtering on size(collect_set(...)) would
     // still materialize a whale's full item array in the aggregation
     // buffer — at corpus scale that is an executor OOM, not a filter.
@@ -175,8 +174,7 @@ object Graph {
     // would inflate every similarity that touches a loyal customer base).
     val baskets = ecols.join(keep, Seq("c"), "left_semi")
       .groupBy(col("c")).agg(sort_array(collect_set(col("s"))).as("items"))
-      .persist()
-    try {
+    Cached.hold(ecols, baskets) {
       // same shuffle strategy as [[pairCensusOf]] (measured there):
       // raw pairs repartitioned by key into cardinality-sized
       // partitions + ONE complete aggregate — map-side combine buys
@@ -195,7 +193,7 @@ object Graph {
         .groupBy(col("s_a"), col("s_b")).agg(count(lit(1)).as("shared_cust"))
         .filter(col("shared_cust") >= minShared)
       scoreCoPurchase(baskets, shared, k, broadcastDegrees, materialize)
-    } finally { baskets.unpersist(); ecols.unpersist() }
+    }
   }
 
   /** The Jaccard/cosine scoring stage over capped baskets and the
@@ -219,7 +217,7 @@ object Graph {
     def hint(df: DataFrame): DataFrame =
       if (broadcastDegrees) broadcast(df) else df
     val dd = col("shared_cust").cast("double")
-    val scored0 = shared
+    val scored = shared
       .join(hint(deg.select(col("s").as("s_a"), col("d").as("deg_a"))),
         Seq("s_a"))
       .join(hint(deg.select(col("s").as("s_b"), col("d").as("deg_b"))),
@@ -231,10 +229,10 @@ object Graph {
       .limit(k)
     // ≤ k rows; frees the basket cache safely. materialize=false is the
     // PlanSpec variant — a localCheckpoint would hide the join plan.
-    val cut = if (materialize) scored0.localCheckpoint(true) else scored0
-    cut.select(col("s_a"), col("s_b"), col("shared_cust"),
-      col("deg_a"), col("deg_b"),
-      round(col("jacc"), 6).as("jaccard"), round(col("cos"), 6).as("cosine"))
+    Cached(materialize).checkpoint(scored)
+      .select(col("s_a"), col("s_b"), col("shared_cust"),
+        col("deg_a"), col("deg_b"),
+        round(col("jacc"), 6).as("jaccard"), round(col("cos"), 6).as("cosine"))
   }
 
   /** Power-of-two degree-distribution histogram of the purchase graph,
@@ -420,11 +418,10 @@ object Graph {
     // partitioning instead of re-exchanging the edge frame. Checkpoint
     // blocks are freed by the ContextCleaner once `adj` is unreachable
     // (the bfsReach per-hop discipline).
-    val adj = pairs.select(col("name_a").as("x"), col("name_b").as("y"))
+    val adj = Cached.checkpoint(pairs.select(col("name_a").as("x"), col("name_b").as("y"))
       .unionByName(pairs.select(col("name_b").as("x"), col("name_a").as("y")))
       .unionByName(names.select(col("name").as("x"), col("name").as("y")))
-      .repartition(col("y"))
-      .localCheckpoint(true)
+      .repartition(col("y")))
     locally {
       var labels = names.select(col("name"), col("name").as("lbl"))
       for (i <- 1 to rounds) {
@@ -432,7 +429,7 @@ object Graph {
           .join(labels.select(col("name").as("y"), col("lbl")), Seq("y"))
           .groupBy(col("x")).agg(min(col("lbl")).as("lbl"))
           .select(col("x").as("name"), col("lbl"))
-        if (i == rounds) labels = labels.localCheckpoint(true)
+        if (i == rounds) labels = Cached.checkpoint(labels)
       }
       // CONVERGENCE GUARD (Spark-side only — output unchanged): run ONE
       // extra propagation round and assert it changes nothing. The fixed
@@ -613,22 +610,20 @@ object Graph {
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("ed"))
       .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
-      .persist()
-    try {
-      val seed = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    Cached.hold(e) {
+      val seed = Cached.checkpoint(e.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .orderBy(col("d").desc, col("src"))
         .limit(1)
-        .select(col("src").as("n"))
-        .localCheckpoint(true) // 1 row
+        .select(col("src").as("n"))) // 1 row
       var frontier = seed
       var visited = seed
       var levels = seed.withColumn("hop", lit(0))
       for (k <- 1 to hops) {
-        val next = e
+        // ≤|V| rows; cuts the round's lineage
+        val next = Cached.checkpoint(e
           .join(frontier.withColumnRenamed("n", "src"), Seq("src"))
           .select(col("dst").as("n")).distinct()
-          .join(visited, Seq("n"), "left_anti")
-          .localCheckpoint(true) // ≤|V| rows; cuts the round's lineage
+          .join(visited, Seq("n"), "left_anti"))
         frontier = next
         // visited = union of the ALREADY-checkpointed frontiers — a
         // k-way union of LogicalRDDs stays O(hops) plan nodes, so
@@ -647,7 +642,7 @@ object Graph {
         .select(col("hop").cast("int").as("hop"), col("n_nodes"),
           col("n_customers"), col("n_suppliers"))
         .orderBy(col("hop"))
-    } finally e.unpersist()
+    }
   }
 
   /** DuckDB twin of [[bfsReach]] — the same seed rule and the same
@@ -816,13 +811,11 @@ object Graph {
     * forms (the dir form feeds the memoized [[strongPairCensus]] cut).
     */
   private def trianglesOverBackbone(backbone: DataFrame, k: Int): DataFrame = {
-    val und = backbone
-      .persist() // canonical (s_a < s_b) edge list — read 3× below
+    val und = backbone // canonical (s_a < s_b) edge list — read 3× below
     val deg = und
       .select(explode(array(col("s_a"), col("s_b"))).as("s"))
-      .groupBy(col("s")).agg(count(lit(1)).as("d"))
-      .persist() // |V| rows
-    try {
+      .groupBy(col("s")).agg(count(lit(1)).as("d")) // |V| rows
+    Cached.hold(und, deg) {
       val aFirst = col("d_a") < col("d_b") ||
         (col("d_a") === col("d_b") && col("s_a") < col("s_b"))
       val o = und
@@ -830,8 +823,9 @@ object Graph {
         .join(deg.select(col("s").as("s_b"), col("d").as("d_b")), Seq("s_b"))
         .select(when(aFirst, col("s_a")).otherwise(col("s_b")).as("u"),
           when(aFirst, col("s_b")).otherwise(col("s_a")).as("v"))
-        .persist() // oriented copy — both sides of the wedge join
-      try {
+      // oriented copy — both sides of the wedge join; the ≤ k-row
+      // checkpoint frees all three caches safely
+      Cached.derive(o) {
         // unordered wedge at u kept once via id-order on the far ends;
         // the closing edge check hits `und` in canonical form directly
         // because vb < vc already holds
@@ -852,9 +846,8 @@ object Graph {
                 (col("degree") * (col("degree") - 1)), 6)))
           .orderBy(col("triangles").desc, col("s"))
           .limit(k)
-          .localCheckpoint(true) // ≤ k rows; frees both caches safely
-      } finally o.unpersist()
-    } finally { und.unpersist(); deg.unpersist() }
+      }
+    }
   }
 
   /** DuckDB twin of [[triangles]] — same capped pair derivation as
@@ -971,15 +964,14 @@ object Graph {
     // half-step (graft.Profile). At 100 TB that inversion is an OOM,
     // not a slowdown; the hint pins the only build side that scales.
     val e0 = bipartiteEdges.select(col("c"), col("s"))
-    val eByC = e0.repartition(col("c")).persist()
-    val eByS = e0.repartition(col("s")).persist()
-    try {
+    val eByC = e0.repartition(col("c"))
+    val eByS = e0.repartition(col("s"))
+    Cached.hold(eByC, eByS) {
       // per-customer out-degree, materialized once: the authority
       // normalizer below is derived from it, which is what lets a whole
       // iteration run as ONE job (see loop comment). eByC is already
       // hashed by c, so the aggregate needs no exchange of its own.
-      val degC = eByC.groupBy(col("c")).agg(count(lit(1)).as("dc"))
-        .localCheckpoint(true)
+      val degC = Cached.checkpoint(eByC.groupBy(col("c")).agg(count(lit(1)).as("dc")))
       val nc = degC.count()
       require(nc > 0, "hits: empty edge frame")
       var hubs = degC.select(col("c"), lit(Scale / nc).as("h"))
@@ -1005,9 +997,8 @@ object Graph {
         // hub half-step: raw(c) = Σ a over outlinks — the one
         // materialization of the iteration; both edge joins (araw's
         // and this one) run inside this job, lineage cuts here
-        val hraw = eByS.join(auths.hint("shuffle_hash"), Seq("s"))
-          .groupBy(col("c")).agg(sum(col("a")).as("raw"))
-          .localCheckpoint(true)
+        val hraw = Cached.checkpoint(eByS.join(auths.hint("shuffle_hash"), Seq("s"))
+          .groupBy(col("c")).agg(sum(col("a")).as("raw")))
         // hub normalizer reads only the ≤|V|-row checkpoint
         hubs = l1Rescale(hraw, "c", "h")
       }
@@ -1022,7 +1013,7 @@ object Graph {
             .select(lit("hub").as("role"), col("c").as("entity_id"),
               col("h").as("score_scaled")))
         .orderBy(col("role"), col("score_scaled").desc, col("entity_id"))
-    } finally { eByC.unpersist(); eByS.unpersist() }
+    }
   }
 
   /** DuckDB twin of [[hits]] — the same L1-rescaled half-steps
@@ -1118,8 +1109,7 @@ object Graph {
         coalesce(expr("CAST(sum(d) DIV 2 AS BIGINT)"), lit(0L)).as("n_edges"))
         .select(lit(r).as("round"), col("n_nodes"), col("n_customers"),
           col("n_suppliers"), col("n_edges"))
-    var edges = undirectedEdges.select(col("src"), col("dst"))
-      .localCheckpoint(true)
+    var edges = Cached.checkpoint(undirectedEdges.select(col("src"), col("dst")))
     // deg stays LAZY on top of the checkpointed edge frame: each reader
     // (keep filter, census) re-derives it with one explode+agg pass over
     // the checkpoint — cheaper than a second per-round materialization
@@ -1130,11 +1120,11 @@ object Graph {
     var out = census(deg, 0)
     for (r <- 1 to rounds) {
       val keep = deg.filter(col("d") >= k).select(col("n"))
-      edges = edges
+      // shrinking frame; cuts the round's lineage
+      edges = Cached.checkpoint(edges
         .join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true) // shrinking frame; cuts the round's lineage
+        .select(col("src"), col("dst")))
       deg = degOf(edges)
       out = out.unionByName(census(deg, r))
     }
@@ -1479,8 +1469,8 @@ object Graph {
     * community) frame covering every endpoint.
     */
   def modularity(backbone: DataFrame, labels: DataFrame): DataFrame = {
-    val und = backbone.select(col("s_a"), col("s_b")).persist()
-    try {
+    val und = backbone.select(col("s_a"), col("s_b"))
+    Cached.hold(und) {
       val m = und.agg(count(lit(1)).as("m"))
       val lbl = labels.select(col("node"), col("community"))
       // backbone side broadcast: it is cap-bounded; labels are not
@@ -1511,7 +1501,7 @@ object Graph {
         .select(col("community"), col("n_nodes"), col("e_within"),
           col("d_total"), col("q_contrib_micro"), col("q_micro"))
         .orderBy(col("community"))
-    } finally und.unpersist()
+    }
   }
 
   /** DuckDB twin of [[modularity]]: the shared backbone CTEs, the

@@ -566,8 +566,8 @@ object Multimodal {
            |            * cells[CAST(i DIV 8 AS INT) * $PhashCols + CAST(pmod(i, 8) AS INT)].ct
            |       THEN acc | shiftleft(CAST(1 AS BIGINT), i) ELSE acc END)""".stripMargin))
       .select(col("doc_id"), col("phash"))
-      .persist()
-    try {
+    // ≤ k rows; the checkpoint frees the hash cache safely
+    Cached.derive(hashed) {
       val buckets = hashed
         .select(col("doc_id"), posexplode(expr(
           s"transform(sequence(0, ${PhashBands - 1}), b -> (phash >> (16 * b)) & 65535)")))
@@ -588,8 +588,7 @@ object Multimodal {
         .withColumn("is_near", col("hamming") <= PhashMaxHamming)
         .orderBy(col("hamming"), col("doc_a"), col("doc_b"))
         .limit(k)
-        .localCheckpoint(true) // ≤ k rows; frees the hash cache safely
-    } finally hashed.unpersist()
+    }
   }
 
   /** DuckDB twin of [[mediaPhash]] — identical strip, grid, cross-

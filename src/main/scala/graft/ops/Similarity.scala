@@ -421,8 +421,7 @@ object Similarity {
     * persisted for the iterations and unpersisted before returning.
     */
   private def trainCentroids(sample: DataFrame, nCells: Int, iters: Int): IndexedSeq[Seq[Double]] = {
-    val s = sample.persist()
-    try {
+    Cached.hold(sample) {
       // init: greedy farthest-point seeding over a SMALL candidate pool
       // (8 candidates per cell, by id-hash order — bounded and
       // scale-independent like the centroid matrix itself). Start from
@@ -434,7 +433,7 @@ object Similarity {
       // hash order fixes the pool and the scan order breaks ties.
       // Works on any id space; fail loudly if the corpus is smaller
       // than the cell count instead of training a broken index.
-      val pool: IndexedSeq[Seq[Double]] = s
+      val pool: IndexedSeq[Seq[Double]] = sample
         .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(nCells * 8)
         .select(col("emb"), col("nrm")).collect()
         .toIndexedSeq.map { row =>
@@ -474,7 +473,7 @@ object Similarity {
       }
       var cents: IndexedSeq[Seq[Double]] = seeds.toIndexedSeq
       for (_ <- 1 to iters) {
-        val assigned = s.withColumn("cell", nearestCell(cents))
+        val assigned = sample.withColumn("cell", nearestCell(cents))
         // spherical k-means: centroid = normalized mean of UNIT members —
         // averaging raw vectors would let large-norm members dominate
         val means = assigned
@@ -495,7 +494,7 @@ object Similarity {
         }
       }
       cents
-    } finally s.unpersist()
+    }
   }
 
   /** Approximate k-NN via IVF (inverted-file) coarse quantization —
@@ -822,10 +821,8 @@ object Similarity {
   def cosineCandidatePairs(corpus: DataFrame, idCol: String, vecCol: String,
                            materialize: Boolean): DataFrame = {
     val normed = withNorm(corpus, idCol, vecCol)
-    val e0 = withSig(normed, sniffDim(normed))
-    val e = if (materialize) e0.persist() else e0
-    try cosinePairsOn(e, materialize)
-    finally if (materialize) e.unpersist()
+    val e = withSig(normed, sniffDim(normed))
+    Cached(materialize).hold(e)(cosinePairsOn(e, materialize))
   }
 
   /** Core pair generation over an already-materialized signed corpus. */
@@ -837,11 +834,10 @@ object Similarity {
       .withColumnRenamed("bkt", "bucket_hash")
     val pairs = Dedup.lshCandidates(buckets, maxBucket = 200, materialize)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-    val verified = pairs
+    Cached(materialize).checkpoint(pairs
       .join(e.select(col("vec_id").as("id_a"), col("emb").as("qe"), col("nrm").as("qn")), Seq("id_a"))
       .join(e.select(col("vec_id").as("id_b"), col("emb"), col("nrm")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), (expr(dot) / (col("qn") * col("nrm"))).as("sim"))
-    if (materialize) verified.localCheckpoint(true) else verified
+      .select(col("id_a"), col("id_b"), (expr(dot) / (col("qn") * col("nrm"))).as("sim")))
   }
 
   /** Approximate k-NN via multi-probe LSH banding. Each corpus vector
@@ -909,10 +905,8 @@ object Similarity {
   def annLsh(corpus: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, k: Int, materialize: Boolean): DataFrame = {
     val normed = withNorm(corpus, idCol, vecCol)
-    val e0 = withSig(normed, sniffDim(normed))
-    val e = if (materialize) e0.persist() else e0
-    try annLshOn(e, queryPred, k, materialize)
-    finally if (materialize) e.unpersist()
+    val e = withSig(normed, sniffDim(normed))
+    Cached(materialize).hold(e)(annLshOn(e, queryPred, k, materialize))
   }
 
   /** Core multi-probe ANN over an already-materialized signed corpus. */
@@ -924,14 +918,13 @@ object Similarity {
       .filter(col("nid") =!= col("query_id"))
       .select(col("query_id"), col("nid"))
       .distinct()
-    val verified0 = cand
+    // checkpoint the verified candidates (small) so downstream consumers
+    // never re-run the candidate joins
+    val verified = Cached(materialize).checkpoint(cand
       .join(e.select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn")), Seq("query_id"))
       .join(e.select(col("vec_id").as("nid"), col("emb"), col("nrm")), Seq("nid"))
       .select(col("query_id"), col("nid"),
-        (expr(dot) / (col("qn") * col("nrm"))).as("sim"))
-    // checkpoint the verified candidates (small) so downstream consumers
-    // never re-run the candidate joins
-    val verified = if (materialize) verified0.localCheckpoint(true) else verified0
+        (expr(dot) / (col("qn") * col("nrm"))).as("sim")))
     verified.groupBy(col("query_id"))
       .agg(TopK.topK(k)(col("sim"), col("nid")).as("top"))
       .select(col("query_id"), posexplode(col("top")))
@@ -1063,8 +1056,9 @@ object Similarity {
     */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
     val exact = knnBrute(spark, dir)
-      .select(col("query_id"), col("neighbor_id")).persist()
-    try {
+      .select(col("query_id"), col("neighbor_id"))
+    // 2×|queries| rows; the checkpoint frees the truth cache
+    Cached.derive(exact) {
       val methods = Seq("lsh" -> annLsh(spark, dir), "ivf" -> annIvf(spark, dir))
       methods.map { case (name, approx) =>
         val hits = approx.select(col("query_id"), col("neighbor_id"))
@@ -1077,8 +1071,7 @@ object Similarity {
             round(col("n_hits").cast("double") / col("k"), 4).as("recall"))
       }.reduce(_ unionByName _)
         .orderBy(col("method"), col("query_id"))
-        .localCheckpoint(true) // 2×|queries| rows; frees the truth cache
-    } finally exact.unpersist()
+    }
   }
 
   /** [[annRecall]] through the PERSISTED-INDEX read paths
@@ -1100,8 +1093,9 @@ object Similarity {
     val pred = col("vec_id") < nQueries
     val exact = knnBrute(Tables.embeddings(spark, dir), "vec_id", "embedding",
         pred, k)
-      .select(col("query_id"), col("neighbor_id")).persist()
-    try {
+      .select(col("query_id"), col("neighbor_id"))
+    // 2×nQueries rows; the checkpoint frees the truth cache
+    Cached.derive(exact) {
       val methods = Seq(
         "lsh" -> annLshFromIndex(spark, dir, table, pred, k),
         "ivf" -> annIvfFromIndex(spark, dir, table, pred, nProbe, k))
@@ -1116,8 +1110,7 @@ object Similarity {
             round(col("n_hits").cast("double") / col("k"), 4).as("recall"))
       }.reduce(_ unionByName _)
         .orderBy(col("method"), col("query_id"))
-        .localCheckpoint(true) // 2×nQueries rows; frees the truth cache
-    } finally exact.unpersist()
+    }
   }
 
   private val SemDedupTau = 0.97
@@ -1208,10 +1201,11 @@ object Similarity {
     val cents = trainCentroids(sample, nCells, iters)
     // one scan-speed pass assigns cells; persisted because the pair
     // join reads it twice and the sizes once
-    val assigned0 = e.withColumn("cell", nearestCell(cents))
+    val assigned = e.withColumn("cell", nearestCell(cents))
       .select(col("vec_id"), col("cell"), col("emb"), col("nrm"))
-    val assigned = if (materialize) assigned0.persist() else assigned0
-    try {
+    // small output (one row per vector, no payload) — checkpointed so
+    // the persisted assignment cache can be dropped before returning
+    Cached(materialize).derive(assigned) {
       val sizes = assigned.groupBy(col("cell")).agg(count(lit(1)).as("csz"))
       // ≤ nCells rows — always broadcastable
       val okCells = broadcast(sizes.filter(col("csz") <= maxCell).select("cell"))
@@ -1224,7 +1218,7 @@ object Similarity {
         .agg(count(lit(1)).as("n_closer_dups"))
       val over = broadcast(sizes.filter(col("csz") > maxCell).select("cell")
         .withColumn("oversized", lit(true)))
-      val out = assigned.select(col("vec_id"), col("cell"))
+      assigned.select(col("vec_id"), col("cell"))
         .join(dropped, Seq("vec_id"), "left")
         .join(over, Seq("cell"), "left")
         .select(col("vec_id"), col("cell").cast("int").as("cell"),
@@ -1234,10 +1228,7 @@ object Similarity {
           // are kept-by-default with the flag raised
           col("n_closer_dups").isNull.as("kept"))
         .orderBy(col("vec_id"))
-      // small output (one row per vector, no payload) — checkpoint so
-      // the persisted assignment cache can be dropped before returning
-      if (materialize) out.localCheckpoint(true) else out
-    } finally if (materialize) assigned.unpersist()
+    }
   }
 
   /** Int8 scalar quantization of the embedding column — the standard
@@ -1500,8 +1491,8 @@ object Similarity {
     val outSchema = StructType(Seq(StructField("round", IntegerType, false),
       StructField("center_id", LongType, false),
       StructField("cover_sim6", DoubleType, true)))
-    val e = withNorm(corpus, idCol, vecCol).persist()
-    try {
+    val e = withNorm(corpus, idCol, vecCol)
+    def greedy(): (DataFrame, Int) = {
       val seed = e.orderBy(col("vec_id")).limit(1)
         .select(col("vec_id"), col("emb"), col("nrm")).collect()
       if (seed.isEmpty)
@@ -1575,7 +1566,8 @@ object Similarity {
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
         .orderBy(col("round")), fullScans)
-    } finally e.unpersist()
+    }
+    Cached.hold(e)(greedy())
   }
 
   /** DuckDB twin of [[kCenter]] — the identical greedy selection
@@ -1693,8 +1685,8 @@ object Similarity {
       StructField("mmr6", DoubleType, false)))
     def emptyOut = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-    val e = withNorm(corpus, idCol, vecCol).persist()
-    try {
+    val e = withNorm(corpus, idCol, vecCol)
+    def greedy(): (DataFrame, Int) = {
       val q = e.filter(col("vec_id") === queryId)
         .select(col("emb"), col("nrm")).collect()
       if (q.isEmpty) return (emptyOut, 0)
@@ -1796,7 +1788,8 @@ object Similarity {
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
         .withColumn("mmr6", round(col("mmr6"), 6))
         .orderBy(col("round")), fullScans)
-    } finally e.unpersist()
+    }
+    Cached.hold(e)(greedy())
   }
 
   /** DuckDB twin of [[mmr]] — the identical greedy trajectory

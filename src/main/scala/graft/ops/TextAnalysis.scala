@@ -1671,71 +1671,21 @@ object TextAnalysis {
     * interpreted-lambda cost that made this the slowest-growing query
     * of the r11 sf1 scale-proof.
     *
-    * Scan-parallelism guard: this operator is unusual in that ALL its
-    * expensive work (tokenize → per-shingle md5) is row-local and
-    * Catalyst rightly collapses it into the SCAN stage — so its
-    * parallelism is the scan's split count, which for parquet is the
-    * ROW-GROUP count, not `maxPartitionBytes`. A small corpus written
-    * as one fat row group (the test fixtures; any single-file export)
-    * pins the whole job to ONE core while the rest idle — measured at
-    * gen-sf3: 16.6 s single-task vs ~2 s spread (and `maxPartitionBytes`
-    * cannot help: splits below one row group serve empty tasks). When
-    * the scan yields fewer than half the cores, we pay one small
-    * repartition of the raw (id, text) rows to fan the kernel out; on
-    * real corpora (100 TB = hundreds of thousands of splits) the
-    * condition is never true and NO shuffle is added — which is also
-    * why the repartition is conditional instead of unconditional: a
-    * blanket `repartition` here would shuffle the full corpus text at
-    * production scale to buy nothing.
-    *
-    * The probe itself must stay PASSIVE: the obvious
-    * `queryExecution.toRdd.getNumPartitions` goes through
-    * `AdaptiveSparkPlanExec.doExecute`, which under AQE eagerly
-    * materializes every upstream shuffle stage as real Spark jobs at
-    * DataFrame-CONSTRUCTION time — double work the final query then
-    * repeats — and throws on a streaming input. So the guard fires
-    * only when the input is a plain narrow chain over parquet scans
-    * (no Exchange anywhere in the physical plan — the only shape where
-    * scan split count IS the job's parallelism; anything downstream of
-    * a shuffle is already `spark.sql.shuffle.partitions` wide), and the
-    * split count is read from the scan node's planned `FileScanRDD` —
-    * driver-side file-split enumeration, no job. Streaming inputs and
-    * shuffled/joined inputs skip the guard entirely.
-    *
-    * `cores` is floored by `spark.sql.shuffle.partitions` alongside
-    * `defaultParallelism`: under dynamic allocation (or before
-    * executors register) `defaultParallelism` can momentarily report
-    * the driver's local slots, which would both mute the guard and
-    * size the fan-out too narrow; the shuffle width is the session's
-    * declared parallelism posture and is allocation-independent.
+    * Scan parallelism: ALL the expensive work (tokenize → per-shingle
+    * md5) is row-local and Catalyst rightly collapses it into the SCAN
+    * stage, so a corpus written as one fat row group pins the whole
+    * job to ONE core — measured at gen-sf3: 16.6 s single-task vs ~2 s
+    * spread (`maxPartitionBytes` cannot help: splits below one row
+    * group serve empty tasks). The input therefore goes through
+    * [[graft.Tables.spreadScan]], which pays one small round-robin
+    * repartition only when the planned scan is narrower than half the
+    * cores; see there for why the probe is passive and conditional.
+    * The (spark, dir) form reads [[graft.Tables.documents]], which has
+    * already fanned out, so the probe sees its Exchange and adds none.
     */
   def docFingerprint(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val base = canon(docs, idCol -> "doc_id", textCol -> "text")
-    val sess = docs.sparkSession
-    val cores = math.max(sess.sparkContext.defaultParallelism,
-      sess.sessionState.conf.numShufflePartitions)
-    val scanParts: Option[Int] =
-      if (docs.isStreaming) None
-      else {
-        // pre-AQE physical plan: analysis + planning only, nothing runs
-        val plan = base.queryExecution.sparkPlan
-        val leaves = plan.collectLeaves()
-        val narrowFileScan = plan.collectFirst {
-          case e: org.apache.spark.sql.execution.exchange.Exchange => e
-        }.isEmpty && leaves.nonEmpty && leaves.forall(
-          _.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
-        if (!narrowFileScan) None
-        else Some(leaves.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.inputRDDs().map(_.getNumPartitions).sum
-        }.sum)
-      }
-    val spread = scanParts match {
-      case Some(p) if p * 2 < cores => base.repartition(cores)
-      case _                        => base
-    }
-    spread
+    Tables.spreadScan(canon(docs, idCol -> "doc_id", textCol -> "text"))
       .select(col("doc_id"),
         expr("md5_shingles(split(text, ' '), 5)").as("sh"))
       .select(col("doc_id"),
@@ -1944,7 +1894,7 @@ object TextAnalysis {
     val spark = docs.sparkSession
     import spark.implicits._
     def esc(s: String): String = s.replace("\\", "\\\\").replace("'", "''")
-    var vocab = docs
+    var vocab = Cached.checkpoint(docs
       .select(explode(split(col(textCol), " ")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("freq"), expr(
@@ -1952,8 +1902,7 @@ object TextAnalysis {
           |  CASE WHEN length(word) >= 1
           |    THEN transform(sequence(1, length(word)), i -> substring(word, i, 1))
           |    ELSE CAST(array() AS array<string>) END,
-          |  array('</w>')) AS syms""".stripMargin))
-      .localCheckpoint()
+          |  array('</w>')) AS syms""".stripMargin)))
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
     var round = 1
@@ -1973,7 +1922,7 @@ object TextAnalysis {
           top.head.getLong(2))
         val merged = l + r
         merges += ((round, l, r, merged, cnt))
-        vocab = vocab.select(col("freq"), expr(
+        vocab = Cached.checkpoint(vocab.select(col("freq"), expr(
           s"""aggregate(
              |  sequence(0, size(syms) - 1),
              |  struct(CAST(array() AS array<string>) AS out, false AS skip),
@@ -1986,8 +1935,7 @@ object TextAnalysis {
              |    ELSE struct(concat(acc.out, array(syms[i])) AS out,
              |                false AS skip)
              |  END,
-             |  acc -> acc.out) AS syms""".stripMargin))
-          .localCheckpoint()
+             |  acc -> acc.out) AS syms""".stripMargin)))
         round += 1
       }
     }
@@ -2171,7 +2119,7 @@ object TextAnalysis {
     val dft = tok.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // df cap BEFORE the persist: hot-term posting lists never enter the
     // cache or the join. q_dropped_terms (below) keeps the cut visible.
-    val w0 = tok.join(dft, Seq("term"))
+    val w = tok.join(dft, Seq("term"))
       .crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("term"), col("df"),
         (col("tf") *
@@ -2180,8 +2128,8 @@ object TextAnalysis {
       .filter(col("w") > 0) // corpus-ubiquitous terms carry no signal
       .filter(col("df") <= SparseKnnPostingCap)
       .drop("df")
-    val w = if (materialize) w0.persist() else w0
-    try {
+    // small: nQueries × k rows — the checkpoint frees the w cache
+    Cached(materialize).derive(w) {
       // visibility: how many of each query doc's positive-weight terms
       // the df cap removed from its vector (bounded: ≤ nQueries rows)
       val qDropped = tok.filter(col("doc_id") < nQueries)
@@ -2206,7 +2154,7 @@ object TextAnalysis {
         .join(norms, Seq("doc_id"))
         .select(col("query_id"), col("doc_id"),
           (col("dot").cast("double") / (col("qn") * col("nrm"))).as("cos"))
-      val out = cos.groupBy(col("query_id"))
+      cos.groupBy(col("query_id"))
         .agg(graft.functions.TopK.topK(k)(col("cos"), col("doc_id")).as("top"))
         .select(col("query_id"), posexplode(col("top")))
         .join(broadcast(qDropped), Seq("query_id"), "left")
@@ -2214,9 +2162,7 @@ object TextAnalysis {
           col("col.id").as("doc_id"), round(col("col.score"), 4).as("cos_sim"),
           coalesce(col("q_dropped_terms"), lit(0L)).as("q_dropped_terms"))
         .orderBy(col("query_id"), col("rank"))
-      // small: nQueries × k rows — frees the w cache
-      if (materialize) out.localCheckpoint(true) else out
-    } finally if (materialize) w.unpersist()
+    }
   }
 
   val sparseKnnSql: String =

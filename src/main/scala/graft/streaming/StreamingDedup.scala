@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -101,23 +101,49 @@ case class NovelGramOut(gram: Long, doc_id: Long, ts_ms: Long)
 object StreamingDedup {
 
   /** Band-probe fan-out: one row per (doc, band) with the doc's hashed
-    * shingle set — built from the SAME native expressions as the batch
-    * sketch pipeline (`graft.ops.Dedup`), which is what makes
-    * stream/batch parity exact rather than approximate.
+    * shingle set, plus the `carry` columns of `docs` — built from the
+    * SAME native expressions as the batch sketch pipeline
+    * (`graft.ops.Dedup`), which is what makes stream/batch parity exact
+    * rather than approximate.
     */
-  private def bandProbes(docs: DataFrame, idCol: String, textCol: String): Dataset[BandProbe] = {
-    val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    import spark.implicits._
-    docs
-      .select(col(idCol).as("doc_id"),
-        expr(s"md5_shingle_hash64(split($textCol, ' '), 3)").as("shset"))
+  private def bandProbes(docs: DataFrame, idCol: String, textCol: String,
+                         carry: Column*): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    val sketched = docs.select(col(idCol).as("doc_id") +:
+      expr(s"md5_shingle_hash64(split($textCol, ' '), 3)").as("shset") +: carry: _*)
+    val kept = sketched.columns.toSeq.drop(2).map(col) // carry, by output name
+    sketched
       .withColumn("sig", expr("minhash_mod64(shset, 64)"))
-      .select(col("doc_id"), col("shset"),
-        posexplode(expr("minhash_band_keys(sig, 4)")))
-      .select(col("pos").cast("int").as("bucket_id"),
-        col("col").as("bucket_hash"), col("doc_id"), col("shset"))
-      .as[BandProbe]
+      .select(col("doc_id") +: col("shset") +:
+        posexplode(expr("minhash_band_keys(sig, 4)")) +: kept: _*)
+      .select(col("pos").cast("int").as("bucket_id") +: col("col").as("bucket_hash") +:
+        col("doc_id") +: col("shset") +: kept: _*)
+  }
+
+  /** One bucket's step over a micro-batch's probes, in doc_id order:
+    * verify each probe against the members (exact Jaccard ≥ `tau`),
+    * then append it unless the bucket already holds `maxBucket`
+    * members — a saturated bucket stops indexing.
+    */
+  private def probeBucket(state: BucketState, sortedProbes: Seq[(Long, Seq[Long])],
+                          tau: Double, maxBucket: Int): (BucketState, Seq[NearDupHit]) = {
+    var st = state
+    val out = Seq.newBuilder[NearDupHit]
+    sortedProbes.foreach { case (id, shset) =>
+      var i = 0
+      while (i < st.ids.length) {
+        if (st.ids(i) != id) {
+          val b = st.sets(i)
+          val c = intersectCount(shset, b)
+          val j = c.toDouble / (shset.length + b.length - c)
+          if (j >= tau) out += NearDupHit(id, st.ids(i), j)
+        }
+        i += 1
+      }
+      if (st.ids.length < maxBucket && !st.ids.contains(id))
+        st = BucketState(st.ids :+ id, st.sets :+ shset)
+    }
+    (st, out.result())
   }
 
   /** Row-local exact intersection count — the Scala twin of the
@@ -144,29 +170,16 @@ object StreamingDedup {
     require(tau > 0 && tau <= 1, s"nearDupIngest: bad tau=$tau")
     val spark = docs.sparkSession
     import spark.implicits._
-    bandProbes(docs, idCol, textCol)
+    bandProbes(docs, idCol, textCol).as[BandProbe]
       .groupByKey(p => (p.bucket_id, p.bucket_hash))
       .flatMapGroupsWithState[BucketState, NearDupHit](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (_, rows: Iterator[BandProbe], state: GroupState[BucketState]) =>
-          var st = state.getOption.getOrElse(BucketState(Vector.empty, Vector.empty))
-          val out = Seq.newBuilder[NearDupHit]
-          rows.toSeq.sortBy(_.doc_id).foreach { p =>
-            var i = 0
-            while (i < st.ids.length) {
-              if (st.ids(i) != p.doc_id) {
-                val b = st.sets(i)
-                val c = intersectCount(p.shset, b)
-                val j = c.toDouble / (p.shset.length + b.length - c)
-                if (j >= tau) out += NearDupHit(p.doc_id, st.ids(i), j)
-              }
-              i += 1
-            }
-            if (st.ids.length < maxBucket && !st.ids.contains(p.doc_id))
-              st = BucketState(st.ids :+ p.doc_id, st.sets :+ p.shset)
-          }
+          val (st, hits) = probeBucket(
+            state.getOption.getOrElse(BucketState(Vector.empty, Vector.empty)),
+            rows.toSeq.sortBy(_.doc_id).map(p => (p.doc_id, p.shset)), tau, maxBucket)
           state.update(st)
-          out.result().iterator
+          hits.iterator
       }
   }
 
@@ -195,17 +208,8 @@ object StreamingDedup {
       s"nearDupIngest: idleRetentionMs must be positive, got $idleRetentionMs" +
         " (use the overload without a timestamp for an unbounded index)")
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
-    docs
-      .withWatermark(tsCol, watermark)
-      .select(col(idCol).as("doc_id"), col(tsCol).as("ts"),
-        expr(s"md5_shingle_hash64(split($textCol, ' '), 3)").as("shset"))
-      .withColumn("sig", expr("minhash_mod64(shset, 64)"))
-      .select(col("doc_id"), col("ts"), col("shset"),
-        posexplode(expr("minhash_band_keys(sig, 4)")))
-      .select(col("pos").cast("int").as("bucket_id"),
-        col("col").as("bucket_hash"), col("doc_id"), col("shset"), col("ts"))
+    bandProbes(docs.withWatermark(tsCol, watermark), idCol, textCol, col(tsCol).as("ts"))
       .as[TimedBandProbe]
       .groupByKey(p => (p.bucket_id, p.bucket_hash))
       .flatMapGroupsWithState[BucketState, NearDupHit](
@@ -216,24 +220,10 @@ object StreamingDedup {
             state.remove()
             Iterator.empty
           } else {
-            var st = state.getOption.getOrElse(
-              BucketState(Vector.empty, Vector.empty))
-            val out = Seq.newBuilder[NearDupHit]
             val batch = rows.toSeq
-            batch.sortBy(_.doc_id).foreach { p =>
-              var i = 0
-              while (i < st.ids.length) {
-                if (st.ids(i) != p.doc_id) {
-                  val b = st.sets(i)
-                  val c = intersectCount(p.shset, b)
-                  val j = c.toDouble / (p.shset.length + b.length - c)
-                  if (j >= tau) out += NearDupHit(p.doc_id, st.ids(i), j)
-                }
-                i += 1
-              }
-              if (st.ids.length < maxBucket && !st.ids.contains(p.doc_id))
-                st = BucketState(st.ids :+ p.doc_id, st.sets :+ p.shset)
-            }
+            val (st, hits) = probeBucket(
+              state.getOption.getOrElse(BucketState(Vector.empty, Vector.empty)),
+              batch.sortBy(_.doc_id).map(p => (p.doc_id, p.shset)), tau, maxBucket)
             state.update(st)
             // re-armed only when the bucket sees traffic; anchored to
             // the probes' own event time (the initial watermark is 0 —
@@ -243,7 +233,7 @@ object StreamingDedup {
             state.setTimeoutTimestamp(
               math.max(lastTs + idleRetentionMs,
                 state.getCurrentWatermarkMs() + 1))
-            out.result().iterator
+            hits.iterator
           }
       }
   }

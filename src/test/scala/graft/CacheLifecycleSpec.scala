@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cache-lifecycle contract: ops that persist intermediates internally
@@ -29,10 +30,64 @@ class CacheLifecycleSpec extends AnyFunSuite {
       ops.Graph.textRank(spark, sfDir),
       ops.Graph.entityComponents(spark, sfDir),
       ops.Graph.triangles(spark, sfDir),
-      ops.Graph.bfsReach(spark, sfDir)
+      ops.Graph.bfsReach(spark, sfDir),
+      ops.Dedup.containmentPairs(spark, sfDir),
+      ops.Dedup.containmentProfile(spark, sfDir),
+      ops.Dedup.dedupIncrementalNear(spark, sfDir),
+      ops.Dedup.similarityJoinProfile(spark, sfDir),
+      ops.Curation.contamination(spark, sfDir),
+      ops.Curation.contaminationSpans(spark, sfDir),
+      ops.Multimodal.mediaPhash(spark, sfDir),
+      ops.Graph.hits(spark, sfDir),
+      ops.Graph.kCore(spark, sfDir),
+      ops.Graph.modularity(spark, sfDir),
+      ops.Similarity.semanticDedup(spark, sfDir),
+      ops.Similarity.annRecall(spark, sfDir)
     ).foreach(_.write.format("noop").mode("overwrite").save())
     assert(spark.sharedState.cacheManager.isEmpty,
       "an op returned without unpersisting its internal cache")
+  }
+
+  test("Cached: release on throw, nothing registered when lazy, checkpoint before release") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val cm = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    // counts how often the input rows are computed: once while cached,
+    // once per read when not
+    val evals = spark.sparkContext.longAccumulator("cached-input-evals")
+    val bump = org.apache.spark.sql.functions.udf { (x: Long) => evals.add(1); x }
+      .asNondeterministic()
+    def input() = spark.range(0, 100, 1, 1).select(bump(col("id")).as("x"))
+
+    val thrown = input()
+    intercept[IllegalStateException] {
+      ops.Cached.derive(thrown) {
+        assert(!cm.isEmpty, "input not persisted")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(cm.isEmpty, "a throwing body left its input cached")
+
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val lazyIn = input()
+    val plan = ops.Cached(materialize = false).derive(lazyIn) {
+      assert(cm.isEmpty, "materialize = false registered a cache")
+      lazyIn.union(lazyIn)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
+      "materialize = false checkpointed")
+    assert(plan.queryExecution.logical.collectFirst { case r: LogicalRDD => r }.isEmpty)
+
+    val in = input()
+    evals.reset()
+    val out = ops.Cached.derive(in)(in.union(in).groupBy(col("x")).count())
+    assert(cm.isEmpty, "derive left its input cached")
+    assert(out.queryExecution.logical.isInstanceOf[LogicalRDD],
+      "derived result is not a checkpoint scan")
+    assert(evals.value == 100,
+      s"input computed ${evals.value} times for 100 rows: checkpoint ran after the release")
+    assert(out.count() == 100 && out.filter(col("count") =!= 2).isEmpty)
+    assert(evals.value == 100, "reading the released result recomputed its input")
   }
 
   test("releasePairs frees the memoized MinHash checkpoint blocks") {

@@ -1,7 +1,8 @@
 package graft
 
-import graft.streaming.{StreamingDedup, TimedText}
+import graft.streaming.{NearDupHit, StreamingDedup, TimedText}
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,19 +55,26 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("saturated bucket stops indexing but keeps probing (cap semantics)") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val in = MemoryStream[TimedText]
-    val q = StreamingDedup.nearDupIngest(in.toDF(), "doc_id", "text",
-        tau = 0.7, maxBucket = 1)
-      .writeStream.format("memory").queryName("neardup_cap").outputMode("append").start()
-    in.addData(TimedText(1, ts(0), d1), TimedText(2, ts(1), d1), TimedText(3, ts(2), d1))
-    q.processAllAvailable()
-    q.stop()
-    val pairs = spark.table("neardup_cap").distinct()
-      .select(col("matched_id"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // only doc 1 fits the capped bucket: 2 and 3 each match 1, but 3
-    // can never match the unindexed 2
-    assert(pairs == Set((1L, 2L), (1L, 3L)), s"cap semantics broken: $pairs")
+    // both overloads: the unbounded index and the evicting one
+    val overloads = Seq[(String, DataFrame => Dataset[NearDupHit])](
+      "neardup_cap" -> (StreamingDedup.nearDupIngest(_, "doc_id", "text",
+        tau = 0.7, maxBucket = 1)),
+      "neardup_cap_timed" -> (StreamingDedup.nearDupIngest(_, "doc_id", "text",
+        "ts", "1 minute", idleRetentionMs = 10L * 60000L, tau = 0.7, maxBucket = 1)))
+    for ((name, ingest) <- overloads) {
+      val in = MemoryStream[TimedText]
+      val q = ingest(in.toDF())
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      in.addData(TimedText(1, ts(0), d1), TimedText(2, ts(1), d1), TimedText(3, ts(2), d1))
+      q.processAllAvailable()
+      q.stop()
+      val pairs = spark.table(name).distinct()
+        .select(col("matched_id"), col("doc_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      // only doc 1 fits the capped bucket: 2 and 3 each match 1, but 3
+      // can never match the unindexed 2
+      assert(pairs == Set((1L, 2L), (1L, 3L)), s"$name: cap semantics broken: $pairs")
+    }
   }
 
   test("checkpointed restart: bucket state recovers from the state store; pair set equals the uninterrupted run") {

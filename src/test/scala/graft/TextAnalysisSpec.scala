@@ -120,6 +120,25 @@ class TextAnalysisSpec extends AnyFunSuite {
     }
   }
 
+  test("docFingerprint fans a one-row-group scan out once; a shuffled input gains no exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-fp-scan").toString + "/docs"
+    (1 to 40).map(i => (i.toLong, s"w$i a b c d e f w${i % 7}")).toDF("id", "body")
+      .coalesce(1).write.parquet(dir)
+    def roundRobins(in: org.apache.spark.sql.DataFrame): Int =
+      ops.TextAnalysis.docFingerprint(in, "id", "body").queryExecution.sparkPlan.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+      }.size
+    val scan = spark.read.parquet(dir)
+    assert(scan.rdd.getNumPartitions == 1, "fixture must be a single scan split")
+    assert(roundRobins(scan) == 1, "a one-row-group corpus must fan out exactly once")
+    assert(roundRobins(scan.repartition(col("id"))) == 0,
+      "an already-shuffled input must not gain a round-robin exchange")
+    assert(ops.TextAnalysis.docFingerprint(scan, "id", "body").count() == 40)
+  }
+
   test("tokenEntropy: constant doc scores 0 / uniform doc scores ln(n); ttr bounds") {
     import spark.implicits._
     val docs = Seq(
