@@ -43,7 +43,6 @@ object Profile {
           // (cpu vs gc vs shuffle io vs scheduler/deser overhead)
           val tm = e.stageInfo.taskMetrics
           val det = if (tm == null) "" else {
-            def s(v: Long) = if (v == 0) "" else v.toString
             val parts = Seq(
               "run" -> (tm.executorRunTime),
               "cpu" -> (tm.executorCpuTime / 1000000),
@@ -68,7 +67,7 @@ object Profile {
         }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        Option(jobs.remove(e.jobId)).foreach { case (t0, d, ns) =>
+        Option(jobs.remove(e.jobId)).foreach { case (t0, d, _) =>
           val (cs, ct) = stages.getOrDefault(e.jobId, (0, 0))
           done.add(Job(e.jobId, d, e.time - t0, ct, cs,
             stageNames.getOrDefault(e.jobId, Nil)))

@@ -12,10 +12,6 @@ import org.apache.spark.sql.DataFrame
   * [[derive]] checkpoints inside the [[hold]] and callers never
   * unpersist by hand.
   *
-  * `Cached(materialize = false)` is the plan-contract variant: nothing
-  * is persisted or checkpointed and [[derive]] returns the lazy plan,
-  * so an explain shows the whole operator instead of a LogicalRDD.
-  *
   * Nested lifecycles must checkpoint once: an inner [[derive]] under an
   * outer [[hold]] (or the reverse), never two derives of one frame —
   * re-checkpointing a checkpoint runs one more job and stores the rows
@@ -23,9 +19,10 @@ import org.apache.spark.sql.DataFrame
   *
   * Every eager `localCheckpoint` of the operators goes through
   * [[checkpoint]], except the [[DatasetMemo]] computes (the memo
-  * attributes their blocks itself).
+  * attributes their blocks itself). Plan contracts read the plans these
+  * checkpoints execute, not the explain of their LogicalRDD scans.
   */
-private[graft] sealed class Cached private (materialize: Boolean) {
+private[graft] object Cached {
 
   /** Persist `frames` in order, run `body`, unpersist them in reverse
     * order in `finally` — also when `body` throws. A frame derived from
@@ -34,23 +31,14 @@ private[graft] sealed class Cached private (materialize: Boolean) {
     */
   def hold[A](frames: DataFrame*)(body: => A): A =
     try {
-      if (materialize) frames.foreach(_.persist())
+      frames.foreach(_.persist())
       body
-    } finally if (materialize) frames.reverseIterator.foreach(_.unpersist())
+    } finally frames.reverseIterator.foreach(_.unpersist())
 
   /** [[hold]] whose body's frame is checkpointed before the release. */
   def derive(frames: DataFrame*)(body: => DataFrame): DataFrame =
     hold(frames: _*)(checkpoint(body))
 
-  /** Eager `localCheckpoint`: materializes `df` now and cuts its
-    * lineage (the lazy plan itself when not materializing).
-    */
-  def checkpoint(df: DataFrame): DataFrame =
-    if (materialize) df.localCheckpoint(true) else df
-}
-
-private[graft] object Cached extends Cached(materialize = true) {
-  private val Lazy = new Cached(materialize = false)
-
-  def apply(materialize: Boolean): Cached = if (materialize) this else Lazy
+  /** Eager `localCheckpoint`: materializes `df` now and cuts its lineage. */
+  def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(true)
 }

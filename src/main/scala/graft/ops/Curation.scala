@@ -128,23 +128,15 @@ object Curation {
     * shingles and a flag.
     */
   def contamination(spark: SparkSession, dir: String): DataFrame =
-    contamination(spark, dir, materialize = true)
-
-  /** `materialize = false` returns the full lazy plan for plan
-    * contracts (the checkpointed hits set explains as a LogicalRDD).
-    */
-  private[graft] def contamination(spark: SparkSession, dir: String,
-                                   materialize: Boolean): DataFrame =
     contamination(Tables.documents(spark, dir), "doc_id", "text",
-      col("doc_id") % 97 === 0, materialize)
+      col("doc_id") % 97 === 0)
 
   /** DataFrame-first form: `benchPred` selects the held-out benchmark
     * rows (by the canonical `doc_id` column); everything else is the
     * corpus under test.
     */
   def contamination(docs0: DataFrame, idCol: String, textCol: String,
-                    benchPred: org.apache.spark.sql.Column,
-                    materialize: Boolean = true): DataFrame = {
+                    benchPred: org.apache.spark.sql.Column): DataFrame = {
     val docs = docs0.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // tokenize ONCE into a column the shingle lambda references —
     // inlining split(text) into the lambda would re-split the document
@@ -159,7 +151,7 @@ object Curation {
                 |  ELSE array() END""".stripMargin).as("sh"))
     // both sides derive from one shingling pass; the persisted frame is
     // dropped after the SMALL per-doc hit counts are checkpointed
-    val hitsM = Cached(materialize).derive(shingled) {
+    val hitsM = Cached.derive(shingled) {
       val corpusSh = shingled.filter(!benchPred)
         .select(col("doc_id"), explode(col("sh")).as("h"))
       // the benchmark shingle set is small and fixed (the eval suites) —

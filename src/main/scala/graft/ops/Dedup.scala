@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   * Cache lifecycle: sketch frames are persisted only while the SMALL
   * verified-pair set is eagerly `localCheckpoint`ed, then unpersisted —
   * chaining dedup ops never accumulates SQL caches, and the checkpoint
-  * cuts lineage for downstream iteration. Ops take a private
-  * `materialize = false` variant returning the full lazy plan so the
-  * plan contracts (PlanSpec) can still see the join shapes.
+  * cuts lineage for downstream iteration. The plan contracts
+  * (PlanSpec) read the join shapes from the plans those checkpoints
+  * execute.
   *
   * Each operator emits a per-document summary (`|documents|` rows,
   * never empty) rather than bare pairs, so the result is stable on
@@ -780,57 +780,59 @@ object Dedup {
     * with a bucket-size cap dropping degenerate buckets (boilerplate
     * content at scale would otherwise make one bucket quadratic).
     *
-    * When materializing: the (bucket, doc) assignments are persisted —
-    * the self-join reads them twice, and without that each side would
-    * re-run the whole upstream sketch pipeline — the distinct pair set
-    * (small) is checkpointed eagerly, and the assignment cache is
-    * dropped before returning.
+    * The (bucket, doc) assignments are persisted — the self-join reads
+    * them twice, and without that each side would re-run the whole
+    * upstream sketch pipeline — the distinct pair set (small) is
+    * checkpointed eagerly, and the assignment cache is dropped before
+    * returning.
     */
-  private[ops] def lshCandidates(buckets: DataFrame, maxBucket: Int,
-                                 materialize: Boolean = true): DataFrame =
-    lshCandidatesImpl(buckets, maxBucket, materialize, withDropped = false)._1
+  private[ops] def lshCandidates(buckets: DataFrame, maxBucket: Int): DataFrame =
+    cappedPairs(buckets, bucketSizes(buckets), maxBucket)
 
   /** As [[lshCandidates]], but ALSO returns the docs whose buckets were
     * dropped by the cap — bucket sizes are computed once and shared by
     * the cap filter and the dropped-doc detection.
     */
-  private[ops] def lshCandidatesWithDropped(buckets: DataFrame, maxBucket: Int,
-                                            materialize: Boolean): (DataFrame, DataFrame) =
-    lshCandidatesImpl(buckets, maxBucket, materialize, withDropped = true)
-
-  private def lshCandidatesImpl(buckets: DataFrame, maxBucket: Int,
-                                materialize: Boolean,
-                                withDropped: Boolean): (DataFrame, DataFrame) = {
-    // bucket sizes via partial+final hash agg + equi-join, NOT a window
-    // count over the bucket key: some blocking schemes (e.g. n-gram
-    // Jaccard's lang × length-bucket) have FEW, HUGE buckets, and a
-    // window would funnel each whole bucket through one task — the agg
-    // combines map-side and the join back is keyed and AQE-skew-safe
-    val sizes = buckets.groupBy(col("bucket_id"), col("bucket_hash"))
-      .agg(count(lit(1)).as("bsz"))
-    // persisted only when read twice (cap filter + dropped detection);
-    // small: one row per bucket
-    Cached(materialize && withDropped).hold(sizes) {
-      val keep = sizes.filter(col("bsz") <= maxBucket)
+  private[ops] def lshCandidatesWithDropped(buckets: DataFrame,
+                                            maxBucket: Int): (DataFrame, DataFrame) = {
+    val sizes = bucketSizes(buckets)
+    // persisted because it is read twice (cap filter + dropped
+    // detection); small: one row per bucket
+    Cached.hold(sizes) {
+      val pairs = cappedPairs(buckets, sizes, maxBucket)
+      val over = sizes.filter(col("bsz") > maxBucket)
         .select(col("bucket_id"), col("bucket_hash"))
-      val capped = buckets
-        .join(keep, Seq("bucket_id", "bucket_hash"))
-        .select(col("bucket_id"), col("bucket_hash"), col("doc_id"))
-      val pairs = Cached(materialize).derive(capped) {
-        capped.as("x").join(capped.as("y"),
-            col("x.bucket_id") === col("y.bucket_id") &&
-            col("x.bucket_hash") === col("y.bucket_hash") &&
-            col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-          .distinct()
-      }
-      val dropped = if (!withDropped) null else {
-        val over = sizes.filter(col("bsz") > maxBucket)
-          .select(col("bucket_id"), col("bucket_hash"))
-        Cached(materialize).checkpoint(
-          buckets.join(over, Seq("bucket_id", "bucket_hash")).select(col("doc_id")).distinct())
-      }
-      (pairs, dropped)
+      (pairs, Cached.checkpoint(
+        buckets.join(over, Seq("bucket_id", "bucket_hash")).select(col("doc_id")).distinct()))
+    }
+  }
+
+  /** Bucket sizes via partial+final hash agg + equi-join, NOT a window
+    * count over the bucket key: some blocking schemes (e.g. n-gram
+    * Jaccard's lang × length-bucket) have FEW, HUGE buckets, and a
+    * window would funnel each whole bucket through one task — the agg
+    * combines map-side and the join back is keyed and AQE-skew-safe.
+    */
+  private def bucketSizes(buckets: DataFrame): DataFrame =
+    buckets.groupBy(col("bucket_id"), col("bucket_hash"))
+      .agg(count(lit(1)).as("bsz"))
+
+  /** The capped self-join: distinct (doc_a < doc_b) pairs sharing a
+    * bucket of at most `maxBucket` docs, checkpointed.
+    */
+  private def cappedPairs(buckets: DataFrame, sizes: DataFrame, maxBucket: Int): DataFrame = {
+    val keep = sizes.filter(col("bsz") <= maxBucket)
+      .select(col("bucket_id"), col("bucket_hash"))
+    val capped = buckets
+      .join(keep, Seq("bucket_id", "bucket_hash"))
+      .select(col("bucket_id"), col("bucket_hash"), col("doc_id"))
+    Cached.derive(capped) {
+      capped.as("x").join(capped.as("y"),
+          col("x.bucket_id") === col("y.bucket_id") &&
+          col("x.bucket_hash") === col("y.bucket_hash") &&
+          col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .distinct()
     }
   }
 
@@ -873,8 +875,7 @@ object Dedup {
 
   private[ops] def minhashVerifiedPairs(spark: SparkSession, dir: String): DataFrame =
     pairsMemo.getOrCompute(spark, dir)(
-      minhashVerifiedPairs(Tables.documents(spark, dir), "doc_id", "text",
-        materialize = true))
+      minhashVerifiedPairs(Tables.documents(spark, dir), "doc_id", "text"))
 
   /** Release the memoized verified-pair set for (session, dir):
     * unpersists its checkpointed RDD blocks and drops the memo entry.
@@ -894,10 +895,6 @@ object Dedup {
     */
   private[graft] def memoRddIds(spark: SparkSession, dir: String): Set[Int] =
     pairsMemo.rddIds(spark, dir)
-
-  private[graft] def minhashVerifiedPairs(spark: SparkSession, dir: String,
-                                          materialize: Boolean): DataFrame =
-    minhashVerifiedPairs(Tables.documents(spark, dir), "doc_id", "text", materialize)
 
   /** 16-band × 4-row LSH buckets from the 64-minhash signature of each
     * doc's shingle set — the shared candidate generator for
@@ -932,11 +929,10 @@ object Dedup {
     * carries a full hash-checked oracle; recovery laws additionally
     * pinned by DedupSpec.
     */
-  def minhashVerifiedPairs(docs: DataFrame, idCol: String, textCol: String,
-                           materialize: Boolean): DataFrame = {
+  def minhashVerifiedPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val sets = shingleSets(docs, idCol, textCol)
-    Cached(materialize).derive(sets) {
-      lshCandidates(minhashBandBuckets(sets), maxBucket = 100, materialize)
+    Cached.derive(sets) {
+      lshCandidates(minhashBandBuckets(sets), maxBucket = 100)
         .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), Seq("doc_a"))
         .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), Seq("doc_b"))
         .select(col("doc_a"), col("doc_b"), jaccard(col("sa"), col("sb")).as("jacc"))
@@ -975,8 +971,7 @@ object Dedup {
     val sets = shingleSets(docs, idCol, textCol)
       .withColumn("sig", expr("minhash_mod64(shset, 64)"))
     Cached.derive(sets) {
-      val cand = lshCandidates(minhashBandBuckets(sets), maxBucket = 100,
-        materialize = true)
+      val cand = lshCandidates(minhashBandBuckets(sets), maxBucket = 100)
       val scored = cand
         .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("sa"),
           col("sig").as("siga")), Seq("doc_a"))
@@ -1221,17 +1216,11 @@ object Dedup {
   def dedupMinhash(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.7): DataFrame =
     perDocSummary(docs.select(col(idCol).as("doc_id")),
-      minhashVerifiedPairs(docs, idCol, textCol, materialize = true),
-      "jacc", threshold)
+      minhashVerifiedPairs(docs, idCol, textCol), "jacc", threshold)
 
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
     perDocSummary(Tables.documents(spark, dir).select(col("doc_id")),
       minhashVerifiedPairs(spark, dir), "jacc", 0.7)
-
-  /** Full lazy plan (no memo, no checkpoint) for plan contracts. */
-  private[graft] def dedupMinhashPlan(spark: SparkSession, dir: String): DataFrame =
-    perDocSummary(Tables.documents(spark, dir).select(col("doc_id")),
-      minhashVerifiedPairs(spark, dir, materialize = false), "jacc", 0.7)
 
   private val IncNearTau = 0.7
 
@@ -1298,7 +1287,7 @@ object Dedup {
         .withColumn("of_index", lit(true))
       // within-increment: standard capped self-join candidates, greedy
       // keep-first (a smaller-id near-dup marks the larger id)
-      val candNew = lshCandidates(newB, maxBucket = 100, materialize = true)
+      val candNew = lshCandidates(newB, maxBucket = 100)
       val vsIncrement = candNew
         .join(newSets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), Seq("doc_a"))
         .join(newSets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), Seq("doc_b"))
@@ -1350,10 +1339,14 @@ object Dedup {
   def containmentPairs(spark: SparkSession, dir: String): DataFrame =
     containmentPairs(Tables.documents(spark, dir), "doc_id", "text", ContainTau)
 
+  private val ContainBottomK = 8
+  private val ContainPostingCap = 100
+  private val ContainMinCoverageMilli = 500L
+
   /** DataFrame-first form over any (id, text) frame. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        tau: Double): DataFrame =
-    containmentPairsImpl(docs, idCol, textCol, tau, materialize = true)
+    containmentPairs(docs, idCol, textCol, tau, ngram = 3)
 
   /** Width-dialed form: `ngram` words per shingle. The escape hatch the
     * coverage guard points at — on a corpus that saturates the default
@@ -1367,24 +1360,9 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        tau: Double, ngram: Int): DataFrame = {
     require(ngram >= 1, s"containmentPairs: bad ngram=$ngram")
-    containmentPairsImpl(docs, idCol, textCol, tau, materialize = true, ngram)
-  }
-
-  /** Full lazy plan (no persist, no checkpoint) for plan contracts. */
-  private[graft] def containmentPairsPlan(spark: SparkSession, dir: String): DataFrame =
-    containmentPairsImpl(Tables.documents(spark, dir), "doc_id", "text",
-      ContainTau, materialize = false)
-
-  private val ContainBottomK = 8
-  private val ContainPostingCap = 100
-  private val ContainMinCoverageMilli = 500L
-
-  private def containmentPairsImpl(docs: DataFrame, idCol: String, textCol: String,
-                                   tau: Double, materialize: Boolean,
-                                   ngram: Int = 3): DataFrame = {
     require(tau > 0 && tau <= 1, s"containmentPairs: bad tau=$tau")
     val sets = shingleSets(docs, idCol, textCol, ngram)
-    Cached(materialize).hold(sets) {
+    Cached.hold(sets) {
       // probe side: bottom-k smallest shingle hashes per doc (k rows/doc)
       val probes = sets.select(col("doc_id"),
         explode(slice(array_sort(col("shset")), 1, ContainBottomK)).as("sh"))
@@ -1395,35 +1373,33 @@ object Dedup {
       val census = inv.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       // small: flagged pairs only — the checkpoint frees the sets +
       // census caches
-      Cached(materialize).derive(census) {
-        if (materialize) {
-          // Probe-coverage pre-flight (first observed at gen-sf3: a
-          // 31-word token pool fully saturates the 3-gram space, every
-          // posting list exceeds the df cap, and the operator silently
-          // returned 0 pairs at 0 recall). A probe only finds its
-          // containing document if its shingle survives the cap, so
-          // kept_mass/mass IS the per-probe hit probability — when it
-          // collapses, the bottom-k guarantee ((1−tau·cov)^k misses) is
-          // void and running the join would be silent garbage. Refuse
-          // loudly instead; the figures come from the census the join
-          // needs anyway.
-          val r = census.agg(
-            coalesce(sum(col("df")), lit(0L)).as("mass"),
-            coalesce(sum(when(col("df") <= ContainPostingCap, col("df"))
-              .otherwise(lit(0L))), lit(0L)).as("kept")).head()
-          val (mass, kept) = (r.getLong(0), r.getLong(1))
-          val covMilli = if (mass == 0L) 1000L else kept * 1000L / mass
-          require(covMilli >= ContainMinCoverageMilli,
-            s"containmentPairs: only $covMilli/1000 of shingle mass survives " +
-              s"the df<=$ContainPostingCap posting cap ($kept of $mass rows) — " +
-              "the corpus has saturated its shingle vocabulary (boilerplate-" +
-              "heavy or tiny token pool), so bottom-k probes cannot reach the " +
-              "index and containment recall silently collapses; run " +
-              "containmentProfile for the census, widen the shingle (the " +
-              s"ngram overload — ${ngram + 2} words per gram grows the space " +
-              "exponentially), or fall back to substringDedup/exact dedup " +
-              "on this corpus")
-        }
+      Cached.derive(census) {
+        // Probe-coverage pre-flight (first observed at gen-sf3: a
+        // 31-word token pool fully saturates the 3-gram space, every
+        // posting list exceeds the df cap, and the operator silently
+        // returned 0 pairs at 0 recall). A probe only finds its
+        // containing document if its shingle survives the cap, so
+        // kept_mass/mass IS the per-probe hit probability — when it
+        // collapses, the bottom-k guarantee ((1−tau·cov)^k misses) is
+        // void and running the join would be silent garbage. Refuse
+        // loudly instead; the figures come from the census the join
+        // needs anyway.
+        val r = census.agg(
+          coalesce(sum(col("df")), lit(0L)).as("mass"),
+          coalesce(sum(when(col("df") <= ContainPostingCap, col("df"))
+            .otherwise(lit(0L))), lit(0L)).as("kept")).head()
+        val (mass, kept) = (r.getLong(0), r.getLong(1))
+        val covMilli = if (mass == 0L) 1000L else kept * 1000L / mass
+        require(covMilli >= ContainMinCoverageMilli,
+          s"containmentPairs: only $covMilli/1000 of shingle mass survives " +
+            s"the df<=$ContainPostingCap posting cap ($kept of $mass rows) — " +
+            "the corpus has saturated its shingle vocabulary (boilerplate-" +
+            "heavy or tiny token pool), so bottom-k probes cannot reach the " +
+            "index and containment recall silently collapses; run " +
+            "containmentProfile for the census, widen the shingle (the " +
+            s"ngram overload — ${ngram + 2} words per gram grows the space " +
+            "exponentially), or fall back to substringDedup/exact dedup " +
+            "on this corpus")
         val keep = census.filter(col("df") <= ContainPostingCap)
           .select(col("sh"))
         val cand = probes
@@ -1822,8 +1798,7 @@ object Dedup {
   def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.7): DataFrame =
     clusterPairs(
-      minhashVerifiedPairs(docs, idCol, textCol, materialize = true)
-        .filter(col("jacc") >= threshold),
+      minhashVerifiedPairs(docs, idCol, textCol).filter(col("jacc") >= threshold),
       docs.select(col(idCol).as("doc_id")))
 
   /** Connected components over ANY duplicate-pair frame — the cluster
@@ -1883,14 +1858,9 @@ object Dedup {
     * invariants pinned by DedupSpec.
     */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    dedupSimhash(spark, dir, materialize = true)
+    dedupSimhash(Tables.documents(spark, dir), "doc_id", "text")
 
-  private[graft] def dedupSimhash(spark: SparkSession, dir: String,
-                                  materialize: Boolean): DataFrame =
-    dedupSimhash(Tables.documents(spark, dir), "doc_id", "text", materialize)
-
-  def dedupSimhash(docs: DataFrame, idCol: String, textCol: String,
-                   materialize: Boolean): DataFrame = {
+  def dedupSimhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val sk = docs
       .select(col(idCol).as("doc_id"),
@@ -1898,13 +1868,13 @@ object Dedup {
       // native codegen'd signature: one fused tokens×64 loop
       .withColumn("simhash", expr("simhash64(hs)"))
       .select(col("doc_id"), col("simhash"))
-    val verified = Cached(materialize).derive(sk) {
+    val verified = Cached.derive(sk) {
       val buckets = sk.select(col("doc_id"),
           posexplode(expr(
             "transform(sequence(0, 3), c -> shiftright(simhash, 16*c) & 65535)")))
         .withColumnRenamed("pos", "bucket_id")
         .withColumnRenamed("col", "bucket_hash")
-      lshCandidates(buckets, maxBucket = 100, materialize)
+      lshCandidates(buckets, maxBucket = 100)
         .join(sk.select(col("doc_id").as("doc_a"), col("simhash").as("ha")), Seq("doc_a"))
         .join(sk.select(col("doc_id").as("doc_b"), col("simhash").as("hb")), Seq("doc_b"))
         // similarity in [0,1]: 1 − hamming/64, so the shared ≥-threshold
@@ -2003,8 +1973,7 @@ object Dedup {
   /** DataFrame-first form over any (id, vector) corpus. */
   def dedupEmbedding(corpus: DataFrame, idCol: String, vecCol: String,
                      threshold: Double = 0.95): DataFrame = {
-    val pairs = Similarity.cosineCandidatePairs(corpus, idCol, vecCol,
-      materialize = true)
+    val pairs = Similarity.cosineCandidatePairs(corpus, idCol, vecCol)
     perDocSummary(corpus.select(col(idCol).as("doc_id")),
       pairs.select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("sim")),
       "sim", threshold)
@@ -2027,20 +1996,15 @@ object Dedup {
     * pipeline owner exactly how much recall the cap cost.
     */
   def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    dedupNgramJaccard(spark, dir, materialize = true)
-
-  private[graft] def dedupNgramJaccard(spark: SparkSession, dir: String,
-                                       materialize: Boolean): DataFrame =
     dedupNgramJaccard(Tables.documents(spark, dir), "doc_id", "text",
-      "lang", "n_chars", materialize)
+      "lang", "n_chars")
 
   /** DataFrame-first form: `blockCol` and `sizeCol` define the blocking
     * key (candidates must share block, length bucket, and a content
     * band).
     */
   def dedupNgramJaccard(docs: DataFrame, idCol: String, textCol: String,
-                        blockCol: String, sizeCol: String,
-                        materialize: Boolean): DataFrame = {
+                        blockCol: String, sizeCol: String): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     // one scan-speed projection carrying sketch + blocking metadata —
     // NOT shingleSets ⋈ meta, which would shuffle the corpus on doc_id.
@@ -2053,7 +2017,7 @@ object Dedup {
       expr(s"md5_shingle_hash64(split($textCol, ' '), 3)").as("shset"),
       col(blockCol).as("lang"),
       expr(s"CAST($sizeCol DIV 50 AS INT)").as("lenb"))
-    val (verified, droppedDocs) = Cached(materialize).hold(sets) {
+    val (verified, droppedDocs) = Cached.hold(sets) {
       // one bucket per bottom-3 shingle hash: content grows the key
       // space; lang+length still restrict candidates to plausible
       // pairs. Bucket keys are plain strings (lang, lenb:hash) — an
@@ -2066,8 +2030,8 @@ object Dedup {
           .as("bucket_hash"),
         col("doc_id"))
       val (cand, droppedDocs) =
-        lshCandidatesWithDropped(buckets, maxBucket = 1000, materialize)
-      (Cached(materialize).checkpoint(cand
+        lshCandidatesWithDropped(buckets, maxBucket = 1000)
+      (Cached.checkpoint(cand
         .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), Seq("doc_a"))
         .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), Seq("doc_b"))
         .select(col("doc_a"), col("doc_b"), jaccard(col("sa"), col("sb")).as("jacc"))),

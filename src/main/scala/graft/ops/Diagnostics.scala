@@ -1605,8 +1605,6 @@ object Diagnostics {
 
   /** DataFrame-first form over any (period, integral measure) frame. */
   def changepoint(df: DataFrame, periodCol: String, valCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 0))
     val series = df.groupBy(col(periodCol).as("m"))
       .agg(sum(col(valCol)).as("s"), count(lit(1)).as("c"))
     val w = Window.orderBy(col("m"))

@@ -157,8 +157,7 @@ object Graph {
                  maxBasket: Int = CoPurchaseMaxBasket,
                  minShared: Int = CoPurchaseMinShared,
                  k: Int = 20,
-                 broadcastDegrees: Boolean = false,
-                 materialize: Boolean = true): DataFrame = {
+                 broadcastDegrees: Boolean = false): DataFrame = {
     val ecols = edges.select(col(custCol).as("c"), col(itemCol).as("s"))
     // cap BEFORE collecting: filtering on size(collect_set(...)) would
     // still materialize a whale's full item array in the aggregation
@@ -192,7 +191,7 @@ object Graph {
           col("s_a"), col("s_b"))
         .groupBy(col("s_a"), col("s_b")).agg(count(lit(1)).as("shared_cust"))
         .filter(col("shared_cust") >= minShared)
-      scoreCoPurchase(baskets, shared, k, broadcastDegrees, materialize)
+      scoreCoPurchase(baskets, shared, k, broadcastDegrees)
     }
   }
 
@@ -209,8 +208,7 @@ object Graph {
     * not have a driver-OOM broadcast forced on it by a hint.
     */
   private def scoreCoPurchase(baskets: DataFrame, shared: DataFrame,
-                              k: Int, broadcastDegrees: Boolean,
-                              materialize: Boolean = true): DataFrame = {
+                              k: Int, broadcastDegrees: Boolean): DataFrame = {
     val deg = baskets
       .select(explode(col("items")).as("s"))
       .groupBy(col("s")).agg(count(lit(1)).as("d"))
@@ -227,9 +225,8 @@ object Graph {
       .withColumn("cos", dd / sqrt((col("deg_a") * col("deg_b")).cast("double")))
       .orderBy(col("jacc").desc, col("s_a"), col("s_b"))
       .limit(k)
-    // ≤ k rows; frees the basket cache safely. materialize=false is the
-    // PlanSpec variant — a localCheckpoint would hide the join plan.
-    Cached(materialize).checkpoint(scored)
+    // ≤ k rows; frees the basket cache safely
+    Cached.checkpoint(scored)
       .select(col("s_a"), col("s_b"), col("shared_cust"),
         col("deg_a"), col("deg_b"),
         round(col("jacc"), 6).as("jaccard"), round(col("cos"), 6).as("cosine"))
@@ -976,7 +973,7 @@ object Graph {
       require(nc > 0, "hits: empty edge frame")
       var hubs = degC.select(col("c"), lit(Scale / nc).as("h"))
       var auths = e0.sparkSession.emptyDataFrame
-      for (i <- 1 to iterations) {
+      for (_ <- 1 to iterations) {
         // authority half-step: raw(s) = Σ h over inlinks. Its L1
         // normalizer needs NO edge pass: Σ_s araw(s) = Σ_(c,s)∈E h(c)
         // = Σ_c h(c)·deg(c) — a |V|-row join against the degree
@@ -1470,38 +1467,36 @@ object Graph {
     */
   def modularity(backbone: DataFrame, labels: DataFrame): DataFrame = {
     val und = backbone.select(col("s_a"), col("s_b"))
-    Cached.hold(und) {
-      val m = und.agg(count(lit(1)).as("m"))
-      val lbl = labels.select(col("node"), col("community"))
-      // backbone side broadcast: it is cap-bounded; labels are not
-      val la = broadcast(und).join(lbl, col("s_a") === col("node"))
-        .drop("node").withColumnRenamed("community", "ca")
-      val labeled = broadcast(la).join(lbl, col("s_b") === col("node"))
-        .drop("node").withColumnRenamed("community", "cb")
-      val within = labeled.filter(col("ca") === col("cb"))
-        .groupBy(col("ca").as("community"))
-        .agg(count(lit(1)).as("e_within"))
-      val deg = labeled
-        .select(explode(array(col("ca"), col("cb"))).as("community"))
-        .groupBy(col("community")).agg(count(lit(1)).as("d_total"))
-      val nodes = broadcast(und
-          .select(explode(array(col("s_a"), col("s_b"))).as("node"))
-          .distinct())
-        .join(lbl, Seq("node"))
-        .groupBy(col("community")).agg(count(lit(1)).as("n_nodes"))
-      val per = deg.join(within, Seq("community"), "left")
-        .na.fill(0L, Seq("e_within"))
-        .join(nodes, Seq("community"))
-        .crossJoin(broadcast(m))
-        .withColumn("q_contrib_micro",
-          expr("e_within * 1000000 DIV m" +
-            " - d_total * d_total * 1000000 DIV (4 * m * m)"))
-      val q = per.agg(sum(col("q_contrib_micro")).as("q_micro"))
-      per.crossJoin(broadcast(q))
-        .select(col("community"), col("n_nodes"), col("e_within"),
-          col("d_total"), col("q_contrib_micro"), col("q_micro"))
-        .orderBy(col("community"))
-    }
+    val m = und.agg(count(lit(1)).as("m"))
+    val lbl = labels.select(col("node"), col("community"))
+    // backbone side broadcast: it is cap-bounded; labels are not
+    val la = broadcast(und).join(lbl, col("s_a") === col("node"))
+      .drop("node").withColumnRenamed("community", "ca")
+    val labeled = broadcast(la).join(lbl, col("s_b") === col("node"))
+      .drop("node").withColumnRenamed("community", "cb")
+    val within = labeled.filter(col("ca") === col("cb"))
+      .groupBy(col("ca").as("community"))
+      .agg(count(lit(1)).as("e_within"))
+    val deg = labeled
+      .select(explode(array(col("ca"), col("cb"))).as("community"))
+      .groupBy(col("community")).agg(count(lit(1)).as("d_total"))
+    val nodes = broadcast(und
+        .select(explode(array(col("s_a"), col("s_b"))).as("node"))
+        .distinct())
+      .join(lbl, Seq("node"))
+      .groupBy(col("community")).agg(count(lit(1)).as("n_nodes"))
+    val per = deg.join(within, Seq("community"), "left")
+      .na.fill(0L, Seq("e_within"))
+      .join(nodes, Seq("community"))
+      .crossJoin(broadcast(m))
+      .withColumn("q_contrib_micro",
+        expr("e_within * 1000000 DIV m" +
+          " - d_total * d_total * 1000000 DIV (4 * m * m)"))
+    val q = per.agg(sum(col("q_contrib_micro")).as("q_micro"))
+    per.crossJoin(broadcast(q))
+      .select(col("community"), col("n_nodes"), col("e_within"),
+        col("d_total"), col("q_contrib_micro"), col("q_micro"))
+      .orderBy(col("community"))
   }
 
   /** DuckDB twin of [[modularity]]: the shared backbone CTEs, the

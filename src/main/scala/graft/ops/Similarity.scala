@@ -690,7 +690,7 @@ object Similarity {
     */
   def annLshFromIndex(spark: SparkSession, table: String, queryPred: Column,
                       k: Int): DataFrame =
-    annLshOn(spark.table(s"${table}_sig"), queryPred, k, materialize = false)
+    annLshTopK(annLshVerified(spark.table(s"${table}_sig"), queryPred), k)
 
   /** Freshness-CHECKED form: requires the stored index's corpus stamp
     * to match `dir`'s current data version before serving
@@ -803,38 +803,28 @@ object Similarity {
     * so the signed-corpus cache can be dropped before returning.
     */
   def cosineCandidatePairs(spark: SparkSession, dir: String): DataFrame =
-    cosinePairsOn(signedCorpus(spark, dir), materialize = true)
-
-  /** `materialize = false` returns the full lazy plan (no persist, no
-    * checkpoint, no memo) — used by plan contracts, which would
-    * otherwise only see a LogicalRDD scan.
-    */
-  private[graft] def cosineCandidatePairs(spark: SparkSession, dir: String,
-                                          materialize: Boolean): DataFrame =
-    if (materialize) cosineCandidatePairs(spark, dir)
-    else cosinePairsOn(withSig(withNorm(spark, dir)), materialize = false)
+    cosinePairsOn(signedCorpus(spark, dir))
 
   /** DataFrame-first form over any (id, vector) frame — the caller owns
     * the corpus lifecycle, so the signed frame is persisted for this
     * call only (the (spark, dir) form shares the memoized checkpoint).
     */
-  def cosineCandidatePairs(corpus: DataFrame, idCol: String, vecCol: String,
-                           materialize: Boolean): DataFrame = {
+  def cosineCandidatePairs(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val normed = withNorm(corpus, idCol, vecCol)
     val e = withSig(normed, sniffDim(normed))
-    Cached(materialize).hold(e)(cosinePairsOn(e, materialize))
+    Cached.hold(e)(cosinePairsOn(e))
   }
 
   /** Core pair generation over an already-materialized signed corpus. */
-  private def cosinePairsOn(e: DataFrame, materialize: Boolean): DataFrame = {
+  private def cosinePairsOn(e: DataFrame): DataFrame = {
     // same capped-bucket self-join machinery as the text dedup path
     // (Dedup.lshCandidates) — shared so fixes apply to both
     val buckets = bandBuckets(e, "doc_id")
       .withColumnRenamed("band", "bucket_id")
       .withColumnRenamed("bkt", "bucket_hash")
-    val pairs = Dedup.lshCandidates(buckets, maxBucket = 200, materialize)
+    val pairs = Dedup.lshCandidates(buckets, maxBucket = 200)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-    Cached(materialize).checkpoint(pairs
+    Cached.checkpoint(pairs
       .join(e.select(col("vec_id").as("id_a"), col("emb").as("qe"), col("nrm").as("qn")), Seq("id_a"))
       .join(e.select(col("vec_id").as("id_b"), col("emb"), col("nrm")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), (expr(dot) / (col("qn") * col("nrm"))).as("sim")))
@@ -887,15 +877,8 @@ object Similarity {
   }
 
   def annLsh(spark: SparkSession, dir: String): DataFrame =
-    annLshOn(signedCorpus(spark, dir), col("vec_id") < NQueries, K,
-      materialize = true)
-
-  /** `materialize = false`: full lazy plan (no memo) for plan contracts. */
-  private[graft] def annLsh(spark: SparkSession, dir: String,
-                            materialize: Boolean): DataFrame =
-    if (materialize) annLsh(spark, dir)
-    else annLshOn(withSig(withNorm(spark, dir)), col("vec_id") < NQueries, K,
-      materialize = false)
+    annLshTopK(Cached.checkpoint(
+      annLshVerified(signedCorpus(spark, dir), col("vec_id") < NQueries)), K)
 
   /** DataFrame-first form; `queryPred` selects query rows by the
     * canonical `vec_id` column name. The caller owns the corpus
@@ -903,35 +886,40 @@ object Similarity {
     * (the (spark, dir) form shares the memoized checkpoint).
     */
   def annLsh(corpus: DataFrame, idCol: String, vecCol: String,
-             queryPred: Column, k: Int, materialize: Boolean): DataFrame = {
+             queryPred: Column, k: Int): DataFrame = {
     val normed = withNorm(corpus, idCol, vecCol)
     val e = withSig(normed, sniffDim(normed))
-    Cached(materialize).hold(e)(annLshOn(e, queryPred, k, materialize))
+    Cached.hold(e)(annLshTopK(Cached.checkpoint(annLshVerified(e, queryPred)), k))
   }
 
-  /** Core multi-probe ANN over an already-materialized signed corpus. */
-  private def annLshOn(e: DataFrame, queryPred: Column, k: Int,
-                       materialize: Boolean): DataFrame = {
+  /** Multi-probe candidates over a signed corpus, verified with exact
+    * cosine: (query_id, nid, sim). Lazy — the in-memory forms checkpoint
+    * it (small) so the top-k never re-runs the candidate joins, while
+    * [[annLshFromIndex]] reads a stored table and has nothing to
+    * release.
+    */
+  private def annLshVerified(e: DataFrame, queryPred: Column): DataFrame = {
     val qb = multiProbeBandBuckets(e.filter(queryPred), "query_id")
     val cand = bandBuckets(e, "nid")
       .join(broadcast(qb), Seq("band", "bkt"))
       .filter(col("nid") =!= col("query_id"))
       .select(col("query_id"), col("nid"))
       .distinct()
-    // checkpoint the verified candidates (small) so downstream consumers
-    // never re-run the candidate joins
-    val verified = Cached(materialize).checkpoint(cand
+    cand
       .join(e.select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn")), Seq("query_id"))
       .join(e.select(col("vec_id").as("nid"), col("emb"), col("nrm")), Seq("nid"))
       .select(col("query_id"), col("nid"),
-        (expr(dot) / (col("qn") * col("nrm"))).as("sim")))
+        (expr(dot) / (col("qn") * col("nrm"))).as("sim"))
+  }
+
+  /** Per-query top-k over verified (query_id, nid, sim) candidates. */
+  private def annLshTopK(verified: DataFrame, k: Int): DataFrame =
     verified.groupBy(col("query_id"))
       .agg(TopK.topK(k)(col("sim"), col("nid")).as("top"))
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).as("rank"),
         col("col.id").as("neighbor_id"), round(col("col.score"), 4).as("sim"))
       .orderBy(col("query_id"), col("rank"))
-  }
 
   /** Embedding-centroid drift report: cosine of each label's centroid
     * against the global corpus centroid — the standard embedding-space
@@ -1177,22 +1165,7 @@ object Similarity {
   /** DataFrame-first form over any (id, vector) frame. */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     nCells: Int, iters: Int, tau: Double,
-                    maxCell: Int): DataFrame =
-    semanticDedupImpl(corpus, idCol, vecCol, nCells, iters, tau, maxCell,
-      materialize = true)
-
-  /** Full lazy plan (no persist, no checkpoint) for plan contracts.
-    * Uses the fixed historical cell count — the PLAN SHAPE is
-    * identical at any nCells and plan contracts must not pay (or
-    * depend on) the auto-size's corpus-count action.
-    */
-  private[graft] def semanticDedupPlan(spark: SparkSession, dir: String): DataFrame =
-    semanticDedupImpl(Tables.embeddings(spark, dir), "vec_id", "embedding",
-      NCells, TrainIters, SemDedupTau, SemDedupMaxCell, materialize = false)
-
-  private def semanticDedupImpl(corpus: DataFrame, idCol: String, vecCol: String,
-                                nCells: Int, iters: Int, tau: Double,
-                                maxCell: Int, materialize: Boolean): DataFrame = {
+                    maxCell: Int): DataFrame = {
     require(nCells >= 2 && iters >= 0 && tau >= -1 && tau <= 1 && maxCell >= 1,
       s"semanticDedup: bad params nCells=$nCells iters=$iters tau=$tau maxCell=$maxCell")
     val e = withNorm(corpus, idCol, vecCol)
@@ -1205,7 +1178,7 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("emb"), col("nrm"))
     // small output (one row per vector, no payload) — checkpointed so
     // the persisted assignment cache can be dropped before returning
-    Cached(materialize).derive(assigned) {
+    Cached.derive(assigned) {
       val sizes = assigned.groupBy(col("cell")).agg(count(lit(1)).as("csz"))
       // ≤ nCells rows — always broadcastable
       val okCells = broadcast(sizes.filter(col("csz") <= maxCell).select("cell"))

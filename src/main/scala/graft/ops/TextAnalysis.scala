@@ -1354,7 +1354,6 @@ object TextAnalysis {
       s"heapsLaw requires an integral id column for its value-grid " +
         s"decile cutoffs; '$idCol' is $idType — hash it to a stable " +
         s"integer first (e.g. xxhash64($idCol))")
-    val spark = docs.sparkSession
     val d = canon(docs, idCol -> "doc_id", textCol -> "text")
     val probe = d.agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
     def cut(k: Int) = expr(s"mn - 1 + ((mx - mn + 1) * $k) DIV ${HeapsDeciles}")
@@ -2101,16 +2100,7 @@ object TextAnalysis {
     * ids below `nQueries`.
     */
   def sparseKnn(docs: DataFrame, idCol: String, textCol: String,
-                nQueries: Int, k: Int): DataFrame =
-    sparseKnnImpl(docs, idCol, textCol, nQueries, k, materialize = true)
-
-  /** Full lazy plan (no persist, no checkpoint) for plan contracts. */
-  private[graft] def sparseKnnPlan(spark: SparkSession, dir: String): DataFrame =
-    sparseKnnImpl(Tables.documents(spark, dir), "doc_id", "text",
-      SparseKnnQueries, SparseKnnK, materialize = false)
-
-  private def sparseKnnImpl(docs: DataFrame, idCol: String, textCol: String,
-                            nQueries: Int, k: Int, materialize: Boolean): DataFrame = {
+                nQueries: Int, k: Int): DataFrame = {
     require(nQueries >= 1 && k >= 1, s"sparseKnn: bad params n=$nQueries k=$k")
     val d = canon(docs, idCol -> "doc_id", textCol -> "text")
     val tok = d.select(col("doc_id"), explode(toks).as("term"))
@@ -2129,7 +2119,7 @@ object TextAnalysis {
       .filter(col("df") <= SparseKnnPostingCap)
       .drop("df")
     // small: nQueries × k rows — the checkpoint frees the w cache
-    Cached(materialize).derive(w) {
+    Cached.derive(w) {
       // visibility: how many of each query doc's positive-weight terms
       // the df cap removed from its vector (bounded: ≤ nQueries rows)
       val qDropped = tok.filter(col("doc_id") < nQueries)

@@ -46,13 +46,10 @@ class CurationSpec extends AnyFunSuite {
     val missed = df.join(exactCopies, Seq("doc_id"))
       .filter(col("contaminated") =!= 1).count()
     assert(missed == 0, s"$missed exact benchmark copies not flagged")
-    // materialize=false: the real op checkpoints the hits set, whose
-    // explain is a LogicalRDD scan that would hide the join shape
-    val plan = ops.Curation.contamination(spark, sfDir, materialize = false)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"contamination joined docs by brute force:\n$plan")
+    // the op checkpoints the hits set, whose explain is a LogicalRDD
+    // scan that would hide the join shape: read every plan it runs
+    RanPlans.assertEquiJoinsOnly("contamination (docs joined by brute force)",
+      RanPlans.of(spark)(ops.Curation.contamination(spark, sfDir).collect()))
   }
 
   test("quality filter: verdict agrees with its own published signals; filtering is explainable") {

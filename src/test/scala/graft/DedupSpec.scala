@@ -135,7 +135,7 @@ class DedupSpec extends AnyFunSuite {
       (5001L, "one two three four five six seven eight nine ten", "en", 48L))
     val docs = (boiler ++ unique).toDF("doc_id", "text", "lang", "n_chars")
     val out = ops.Dedup
-      .dedupNgramJaccard(docs, "doc_id", "text", "lang", "n_chars", materialize = true)
+      .dedupNgramJaccard(docs, "doc_id", "text", "lang", "n_chars")
       .cache()
     try {
       val flagged = out.filter(col("in_dropped_bucket") === 1)

@@ -29,8 +29,8 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(ops.Dedup.dedupExact(empty, "doc_id", "text").count() == 0)
     assert(ops.Dedup.dedupMinhash(empty, "doc_id", "text").count() == 0)
     assert(ops.Dedup.canonicalize(empty).count() == 0)
-    assert(ops.Dedup.dedupNgramJaccard(empty, "doc_id", "text", "lang", "n_chars",
-      materialize = true).count() == 0)
+    assert(ops.Dedup.dedupNgramJaccard(empty, "doc_id", "text", "lang", "n_chars")
+      .count() == 0)
     assert(ops.Curation.repetitionStats(empty, "doc_id", "text").count() == 0)
     assert(ops.Curation.chunkTokens(empty, "doc_id", "text", 64).count() == 0)
     assert(ops.Curation.qualityFilter(empty, "doc_id", "text").count() == 0)
@@ -43,8 +43,8 @@ class EdgeCasesSpec extends AnyFunSuite {
   test("single-document corpus: pair-based ops emit one clean singleton row") {
     val mh = ops.Dedup.dedupMinhash(single, "doc_id", "text").collect()
     assert(mh.length == 1 && mh(0).getAs[Long]("n_candidates") == 0)
-    val ng = ops.Dedup.dedupNgramJaccard(single, "doc_id", "text", "lang", "n_chars",
-      materialize = true).collect()
+    val ng = ops.Dedup.dedupNgramJaccard(single, "doc_id", "text", "lang", "n_chars")
+      .collect()
     assert(ng.length == 1 && ng(0).getAs[Long]("n_dups") == 0
       && ng(0).getAs[Int]("in_dropped_bucket") == 0)
     val qf = ops.Curation.qualityFilter(single, "doc_id", "text").collect()

@@ -119,8 +119,7 @@ class MixingSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "A", base), (2L, "B", tweaked), (3L, "C", other), (4L, "A", base))
       .toDF("doc_id", "source", "text")
-    val pairs = ops.Dedup.minhashVerifiedPairs(docs, "doc_id", "text",
-      materialize = true)
+    val pairs = ops.Dedup.minhashVerifiedPairs(docs, "doc_id", "text")
     val got = ops.Mixing.sourceOverlapNear(docs, pairs, "doc_id", "source", 0.7)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     // full off-diagonal matrix over {A,B,C}: 6 cells
@@ -149,7 +148,7 @@ class MixingSpec extends AnyFunSuite {
     // cross-source matrix by hand, compare every cell exactly (the
     // q_span_dedup driver-model discipline for a rows-only query)
     val pairs = ops.Dedup
-      .minhashVerifiedPairs(spark, sfDir, materialize = false)
+      .minhashVerifiedPairs(Tables.documents(spark, sfDir), "doc_id", "text")
       .filter(col("jacc") >= 0.7)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -164,7 +163,7 @@ class MixingSpec extends AnyFunSuite {
     }
     val got = ops.Mixing
       .sourceOverlapNear(Tables.documents(spark, sfDir),
-        ops.Dedup.minhashVerifiedPairs(spark, sfDir, materialize = false),
+        ops.Dedup.minhashVerifiedPairs(Tables.documents(spark, sfDir), "doc_id", "text"),
         "doc_id", "source", 0.7)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap

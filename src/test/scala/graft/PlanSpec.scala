@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, FilterExec, SparkPlan}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan contracts: the plans we shipped are the plans we
@@ -13,6 +13,44 @@ class PlanSpec extends AnyFunSuite {
 
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** Every plan `op` executes: building it (its eager checkpoints and
+    * guards) and one action on its result. The explain of a
+    * materialized op is only a LogicalRDD scan of its last checkpoint,
+    * which hides the join shapes these contracts pin.
+    */
+  private def ran(op: => DataFrame): Seq[SparkPlan] =
+    RanPlans.of(spark)(op.collect())
+
+  test("executed-plan census counts the final AQE plan once: one join, reuse as reuse") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.functions.col
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val l = spark.range(0, 1000, 1, 4).toDF("k")
+      val r = spark.range(0, 1000, 1, 4).select(col("id").as("k"), (col("id") * 2).as("v"))
+      val join = l.join(r, "k")
+      join.collect()
+      val ep = join.queryExecution.executedPlan
+      val c = ExecutedPlan.census(ep)
+      assert(c.joins == Map("SortMergeJoin" -> 1) && c.shuffles == 2 && c.reusedExchanges == 0,
+        s"one shuffle join: $c\n$ep")
+      // the AQE node prints its final AND its initial plan, one join
+      // each; the census reads only the final one
+      assert("SortMergeJoin".r.findAllIn(ep.toString).size == 2, s"$ep")
+      val initial = ep.asInstanceOf[AdaptiveSparkPlanExec].initialPlan
+      assert(initial.collect { case j: SortMergeJoinExec => j }.size == 1, s"$initial")
+
+      val agg = spark.range(0, 1000, 1, 4).groupBy((col("id") % 10).as("k")).count()
+      val self = agg.join(agg.withColumnRenamed("count", "c2"), "k")
+      self.collect()
+      val s = ExecutedPlan.census(self.queryExecution.executedPlan)
+      assert(s.reusedExchanges == 1 && s.shuffles == 1 && s.joins == Map("SortMergeJoin" -> 1),
+        s"self-join of one aggregate: $s\n${self.queryExecution.executedPlan}")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
 
   test("pricing summary pushes the date filter into the parquet scan and prunes columns") {
     val plan = formatted(ops.Relational.pricingSummary(spark, sfDir))
@@ -43,19 +81,17 @@ class PlanSpec extends AnyFunSuite {
     // knnBrute is deliberately corpus × broadcast(10 queries) — a
     // bounded BroadcastNestedLoopJoin is its correct physical shape
     assert(!formatted(ops.Similarity.knnBrute(spark, sfDir)).contains("CartesianProduct"))
-    // the approximate paths must stay on equi-joins over buckets/cells —
-    // asserted on the materialize=false plan variants, since the real
-    // ops eagerly checkpoint their candidate sets (the explain of a
-    // checkpointed frame is just a LogicalRDD scan and would hide the
-    // join shape this contract exists to pin)
-    Seq(
-      ops.Similarity.annLsh(spark, sfDir, materialize = false),
-      ops.Similarity.annIvf(spark, sfDir),
-      ops.Dedup.dedupMinhashPlan(spark, sfDir)).foreach { df =>
-      val plan = formatted(df)
-      assert(!plan.contains("CartesianProduct"), s"cartesian product:\n$plan")
-      assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop join:\n$plan")
-    }
+    // the approximate paths must stay on equi-joins over buckets/cells
+    val ivf = formatted(ops.Similarity.annIvf(spark, sfDir))
+    assert(!ivf.contains("CartesianProduct"), s"cartesian product:\n$ivf")
+    assert(!ivf.contains("BroadcastNestedLoopJoin"), s"nested loop join:\n$ivf")
+    RanPlans.assertEquiJoinsOnly("annLsh", ran(ops.Similarity.annLsh(spark, sfDir)))
+    // the verified pairs are memoized per dataset: release them so the
+    // op runs its candidate joins here
+    RanPlans.assertEquiJoinsOnly("dedupMinhash", ran {
+      ops.Dedup.releasePairs(spark, sfDir)
+      ops.Dedup.dedupMinhash(spark, sfDir)
+    })
   }
 
   test("as-of join costs one keyed shuffle, not an inequality nested loop") {
@@ -329,26 +365,33 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("semantic dedup and containment stay on equi-joins — no cartesian, no nested loop") {
-    Seq(
-      ops.Similarity.semanticDedupPlan(spark, sfDir),
-      ops.Dedup.containmentPairsPlan(spark, sfDir)).foreach { df =>
-      val plan = formatted(df)
-      assert(!plan.contains("CartesianProduct"), s"cartesian product:\n$plan")
-      assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop join:\n$plan")
-    }
+    import org.apache.spark.sql.functions.col
+    // planted exact copies give the cell self-join rows: at this scale
+    // the corpus has no near-duplicates, and AQE drops a join whose
+    // side ran empty from the final plan. Cell count, iterations, tau
+    // and cap are the corpus query's fixed historical ones.
+    val emb = Tables.embeddings(spark, sfDir)
+    val planted = emb.unionByName(emb.filter(col("vec_id") < 50)
+      .withColumn("vec_id", col("vec_id") + 1000000L))
+    RanPlans.assertEquiJoinsOnly("semanticDedup", ran(ops.Similarity.semanticDedup(
+      planted, "vec_id", "embedding", nCells = 8, iters = 3, tau = 0.97, maxCell = 5000)))
+    RanPlans.assertEquiJoinsOnly("containmentPairs", ran(ops.Dedup.containmentPairs(spark, sfDir)))
   }
 
   test("sparse knn stays on keyed equi-joins — no cartesian, only the 1-row stats broadcast") {
-    // the lazy-plan variant: the production form localCheckpoints its
-    // (bounded) result, which would hide the plan behind a LogicalRDD
-    val plan = formatted(ops.TextAnalysis.sparseKnnPlan(spark, sfDir))
-    assert(!plan.contains("CartesianProduct"), s"cartesian in sparse knn:\n$plan")
+    val plans = ran(ops.TextAnalysis.sparseKnn(spark, sfDir))
+    val names = RanPlans.names(plans)
+    def plan = plans.map(_.treeString).mkString("\n")
+    assert(!names.contains("CartesianProduct"), s"cartesian in sparse knn:\n$plan")
     // the n_docs scalar rides a 1-row broadcast nested loop — that one is
     // bounded and correct; anything unbounded is not
-    assert(!plan.contains("Window"), s"ranking must be the TopK aggregate:\n$plan")
+    assert(!names.contains("Window"), s"ranking must be the TopK aggregate:\n$plan")
     // the posting-list df cap must sit in the plan: hot terms are cut
     // BEFORE the weighted frame is cached or joined
-    assert(plan.contains("<= 1000"), s"df cap filter missing from the plan:\n$plan")
+    assert(RanPlans.nodes(plans).exists {
+      case f: FilterExec => f.condition.toString.contains("<= 1000")
+      case _ => false
+    }, s"df cap filter missing from the plan:\n$plan")
   }
 
   test("revenue growth joins its prior-period months by broadcast, never a window over months") {
@@ -630,29 +673,32 @@ class PlanSpec extends AnyFunSuite {
     // the shipped supplier-dimension query passes broadcastDegrees=true
     // (bounded catalog); the generic DataFrame-first form must NOT force
     // a broadcast — a 100M-item catalog would OOM the driver. With
-    // size-estimate broadcasts killed, any BroadcastExchange left is
-    // hint-driven, so the flag is directly observable in the plan.
+    // size-estimate broadcasts killed (AQE's runtime threshold falls
+    // back to the same setting), any BroadcastExchange left is
+    // hint-driven, so the flag is directly observable in the plans the
+    // op runs.
     import spark.implicits._
     val edges = (for (c <- 1L to 40L; s <- 1L to 6L if (c + s) % 2 == 0)
       yield (c, s)).toDF("c", "s")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val hinted = formatted(ops.Graph.coPurchase(edges, "c", "s",
-        maxBasket = 128, minShared = 1, k = 10, broadcastDegrees = true,
-        materialize = false))
-      val nHinted = "BroadcastExchange \\(\\d".r.findAllIn(hinted).size
+      def run(broadcastDegrees: Boolean) = {
+        val plans = ran(ops.Graph.coPurchase(edges, "c", "s",
+          maxBasket = 128, minShared = 1, k = 10, broadcastDegrees = broadcastDegrees))
+        (RanPlans.names(plans), plans.map(_.treeString).mkString("\n"))
+      }
+      val (hinted, hintedPlan) = run(broadcastDegrees = true)
+      val nHinted = hinted.count(_ == "BroadcastExchange")
       assert(nHinted == 2,
-        s"vouched catalog: expected both degree-frame broadcasts, got $nHinted:\n$hinted")
-      val generic = formatted(ops.Graph.coPurchase(edges, "c", "s",
-        maxBasket = 128, minShared = 1, k = 10, broadcastDegrees = false,
-        materialize = false))
-      val nGeneric = "BroadcastExchange \\(\\d".r.findAllIn(generic).size
+        s"vouched catalog: expected both degree-frame broadcasts, got $nHinted:\n$hintedPlan")
+      val (generic, genericPlan) = run(broadcastDegrees = false)
+      val nGeneric = generic.count(_ == "BroadcastExchange")
       assert(nGeneric == 0,
-        s"generic form forced a degree broadcast (AQE must decide):\n$generic")
+        s"generic form forced a degree broadcast (AQE must decide):\n$genericPlan")
       assert(generic.contains("SortMergeJoin") ||
         generic.contains("ShuffledHashJoin"),
-        s"generic form lost the shuffle-join path:\n$generic")
+        s"generic form lost the shuffle-join path:\n$genericPlan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 

@@ -649,8 +649,7 @@ class SimilaritySpec extends AnyFunSuite {
       3L -> Array(-4.0, 3.0, -2.0, 1.0))
     for (parts <- Seq(1, 3)) {
       val corpus = rows.toDF("vec_id", "embedding").repartition(parts)
-      val got = ops.Similarity.cosineCandidatePairs(
-          corpus, "vec_id", "embedding", materialize = false)
+      val got = ops.Similarity.cosineCandidatePairs(corpus, "vec_id", "embedding")
         .filter(col("sim") > 0.99)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(got == Set((1L, 2L)),

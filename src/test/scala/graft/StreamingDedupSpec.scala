@@ -45,7 +45,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(got.exists { case (a, b, _) => a == 1L && b == 4L }, s"cross-batch hit missing: $got")
     // exact parity with the batch near-dup pair generator on the union corpus
     val corpus = Seq((1L, d1), (2L, d2), (3L, d3), (4L, d4), (5L, d5)).toDF("doc_id", "text")
-    val batch = ops.Dedup.minhashVerifiedPairs(corpus, "doc_id", "text", materialize = true)
+    val batch = ops.Dedup.minhashVerifiedPairs(corpus, "doc_id", "text")
       .filter(col("jacc") >= 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == batch,
@@ -110,7 +110,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // exact parity with the batch pair generator = parity with the
     // uninterrupted stream (the first test pins stream==batch)
     val corpus = Seq((1L, d1), (2L, d2), (3L, d3), (4L, d4), (5L, d5)).toDF("doc_id", "text")
-    val batch = ops.Dedup.minhashVerifiedPairs(corpus, "doc_id", "text", materialize = true)
+    val batch = ops.Dedup.minhashVerifiedPairs(corpus, "doc_id", "text")
       .filter(col("jacc") >= 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == batch,
