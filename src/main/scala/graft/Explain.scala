@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
 
 /** Plan-audit main: prints a one-line operator census (and with `-v`
   * the full formatted plan) for each named query — or all of them.
@@ -13,8 +13,9 @@ import org.apache.spark.sql.execution.ExplainMode
 object Explain {
   def main(args: Array[String]): Unit = {
     val verbose = args.contains("-v")
-    // -x: EXECUTE the query first and census/print the FINAL adaptive
-    // plan (AQE re-plans join strategies, reuses exchanges and inserts
+    // -x: EXECUTE the query and census every plan it ran: its ops'
+    // eager checkpoints and guards, and the FINAL adaptive plan of its
+    // result (AQE re-plans join strategies, reuses exchanges and inserts
     // AQEShuffleReads at runtime; the pre-execution plan cannot show
     // which side was actually built/broadcast or what got coalesced)
     val execute = args.contains("-x")
@@ -23,15 +24,23 @@ object Explain {
     val names = if (rest.length > 1) rest.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = GraftSession.fromEnv("graft-explain", logLevel = "ERROR")
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, dir)
-      val ep = df.queryExecution.executedPlan
-      // execute THIS QueryExecution (a noop write would clone the
-      // plan and leave this one's AQE state untouched)
-      if (execute) ep.execute().count()
-      println(s"$n: ${ExecutedPlan.census(ep).summary}")
-      if (verbose)
-        println(if (execute) ep.toString
-          else df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      def build() = SparkEntry.queries(n)(spark, dir).queryExecution
+      if (execute) {
+        ops.DatasetMemo.clearAll() // a memo hit would skip the op's work
+        val plans = ExecutedPlan.ran(spark) {
+          // execute THIS QueryExecution (a noop write would clone the
+          // plan and leave this one's AQE state untouched), under an
+          // execution id so the capture sees it
+          val qe = build()
+          SQLExecution.withNewExecutionId(qe, Some("explain"))(qe.executedPlan.execute().count())
+        }
+        println(s"$n: ${ExecutedPlan.census(plans: _*).summary}")
+        if (verbose) plans.foreach(println)
+      } else {
+        val qe = build()
+        println(s"$n: ${ExecutedPlan.census(qe.executedPlan).summary}")
+        if (verbose) println(qe.explainString(ExplainMode.fromString("formatted")))
+      }
     }
     spark.stop()
   }

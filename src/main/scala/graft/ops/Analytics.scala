@@ -676,7 +676,12 @@ object Analytics {
       // basket agg's read by BYTES, but each partition anchors a task
       // whose pair work is quadratic in basket size. The basket frame
       // is one linear pass's output — a round-robin of it is ~free
-      // next to the explode it widens.
+      // next to the explode it widens. Unlike pairCensusOf it does not
+      // probe the width first: every pairCensusOf caller has already
+      // materialized its basket frame, so the probe is a driver-side
+      // read, while this basket frame is lazy and a probe would run
+      // its AQE stages as jobs at construction (the reason
+      // Tables.spreadScan's probe is passive).
       .repartition(lines.sparkSession.sessionState.conf
         .numShufflePartitions)
       // two-stage explode: anchor index first, then only the i-suffix

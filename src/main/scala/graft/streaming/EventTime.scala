@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -375,6 +375,31 @@ object EventTime {
       }
   }
 
+  /** Start (epoch ms) of the fixed `windowMs` window holding the
+    * timestamp column `ts` — pure long arithmetic, the unit the
+    * event-time timeouts that close a window are registered in.
+    */
+  private def windowStartMs(ts: String, windowMs: Long): Column =
+    (floor(unix_millis(col(ts)) / windowMs) * windowMs).cast("long")
+
+  /** One call of a per-window sketch keyed by its window: once the
+    * watermark has passed `windowEndMs` (the timeout this sets) the
+    * final state is evicted and `emit`ted; until then the rows `fold`
+    * into the state.
+    */
+  private def closeWindow[R, S, O](state: GroupState[S], rows: Iterator[R],
+                                   windowEndMs: Long, empty: => S)(
+      fold: (S, Iterator[R]) => S)(emit: S => Iterator[O]): Iterator[O] =
+    if (state.hasTimedOut) {
+      val s = state.get
+      state.remove()
+      emit(s)
+    } else {
+      state.update(fold(state.getOption.getOrElse(empty), rows))
+      state.setTimeoutTimestamp(windowEndMs)
+      Iterator.empty
+    }
+
   /** Streaming twin of the batch heavy-hitters miner
     * ([[graft.ops.TextAnalysis.heavyHitters]]): one bounded
     * Misra–Gries summary per event-time tumbling window, maintained in
@@ -405,9 +430,7 @@ object EventTime {
     import docs.sparkSession.implicits._
     docs.toDF()
       .withWatermark("ts", watermark)
-      .select(col("ts"),
-        (floor(unix_millis(col("ts")) / windowMs) * windowMs).cast("long")
-          .as("w_start_ms"),
+      .select(col("ts"), windowStartMs("ts", windowMs).as("w_start_ms"),
         posexplode(split(col("text"), " ")))
       .withColumnRenamed("col", "term")
       .filter(col("term") =!= "")
@@ -416,32 +439,26 @@ object EventTime {
       .flatMapGroupsWithState[HHState, HeavyOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (wStart: Long, rows: Iterator[TimedTerm], state: GroupState[HHState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed the window end: emit the final summary
-            val s = state.get
-            state.remove()
+          closeWindow(state, rows, wStart + windowMs, HHState(Map.empty, 0L, 0L)) {
+            // deterministic fold order within the invocation
+            (s0, rows) => rows.toSeq.sortBy(r => (r.ts.getTime, r.pos)).foldLeft(s0) {
+              (s, r) =>
+                val m = s.counts
+                m.get(r.term) match {
+                  case Some(c) => HHState(m.updated(r.term, c + 1L), s.dec, s.n + 1)
+                  case None if m.size < width =>
+                    HHState(m.updated(r.term, 1L), s.dec, s.n + 1)
+                  case None =>
+                    // decrement-all: the incoming term and one unit of every
+                    // tracked term cancel — fires ≤ n/(width+1) times
+                    HHState(m.flatMap { case (t, c) =>
+                      if (c > 1L) Some(t -> (c - 1L)) else None
+                    }, s.dec + 1, s.n + 1)
+                }
+            }
+          } { s =>
             s.counts.toSeq.sortBy { case (t, c) => (-c, t) }.iterator
               .map { case (t, c) => HeavyOut(wStart, t, c, s.dec, s.n) }
-          } else {
-            var s = state.getOption.getOrElse(HHState(Map.empty, 0L, 0L))
-            // deterministic fold order within the invocation
-            rows.toSeq.sortBy(r => (r.ts.getTime, r.pos)).foreach { r =>
-              val m = s.counts
-              s = m.get(r.term) match {
-                case Some(c) => HHState(m.updated(r.term, c + 1L), s.dec, s.n + 1)
-                case None if m.size < width =>
-                  HHState(m.updated(r.term, 1L), s.dec, s.n + 1)
-                case None =>
-                  // decrement-all: the incoming term and one unit of every
-                  // tracked term cancel — fires ≤ n/(width+1) times
-                  HHState(m.flatMap { case (t, c) =>
-                    if (c > 1L) Some(t -> (c - 1L)) else None
-                  }, s.dec + 1, s.n + 1)
-              }
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(wStart + windowMs)
-            Iterator.empty
           }
       }
   }
@@ -521,18 +538,24 @@ object EventTime {
     import docs.sparkSession.implicits._
     docs.toDF()
       .withWatermark("ts", watermark)
-      .select(col("ts"),
-        (floor(unix_millis(col("ts")) / windowMs) * windowMs).cast("long")
-          .as("w_start_ms"),
+      .select(col("ts"), windowStartMs("ts", windowMs).as("w_start_ms"),
         col("cat"))
       .as[WindowedCat]
       .groupByKey(_.w_start_ms)
       .flatMapGroupsWithState[DriftState, DriftOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (wStart: Long, rows: Iterator[WindowedCat], state: GroupState[DriftState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
+          closeWindow(state, rows, wStart + windowMs, DriftState(Map.empty, 0L)) {
+            (s0, rows) =>
+              rows.foldLeft(s0) { (s, r) =>
+                val key =
+                  if (s.counts.contains(r.cat) || s.counts.size < maxCats) r.cat
+                  else "__other" // bounded state: overflow mass stays visible
+                DriftState(
+                  s.counts.updated(key, s.counts.getOrElse(key, 0L) + 1L),
+                  s.n + 1L)
+              }
+          } { s =>
             // Spark round() semantics on doubles: half away from zero
             def halfAway(x: Double): Long =
               (if (x >= 0) math.floor(x + 0.5) else math.ceil(x - 0.5)).toLong
@@ -549,19 +572,6 @@ object EventTime {
             Iterator.single(DriftOut(wStart, s.n,
               s.counts.size.toLong, s.counts.getOrElse("__other", 0L),
               jsdMicro))
-          } else {
-            var s = state.getOption.getOrElse(DriftState(Map.empty, 0L))
-            rows.foreach { r =>
-              val key =
-                if (s.counts.contains(r.cat) || s.counts.size < maxCats) r.cat
-                else "__other" // bounded state: overflow mass stays visible
-              s = DriftState(
-                s.counts.updated(key, s.counts.getOrElse(key, 0L) + 1L),
-                s.n + 1L)
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(wStart + windowMs)
-            Iterator.empty
           }
       }
   }
@@ -605,9 +615,7 @@ object EventTime {
     import docs.sparkSession.implicits._
     docs.toDF()
       .withWatermark("ts", watermark)
-      .select(col("ts"),
-        (floor(unix_millis(col("ts")) / windowMs) * windowMs).cast("long")
-          .as("w_start_ms"),
+      .select(col("ts"), windowStartMs("ts", windowMs).as("w_start_ms"),
         col("source"), col("len"))
       .as[WindowedMeasure]
       .groupByKey(m => (m.w_start_ms, m.source))
@@ -615,9 +623,20 @@ object EventTime {
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (key: (Long, String), rows: Iterator[WindowedMeasure],
          state: GroupState[KsState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
+          closeWindow(state, rows, key._1 + windowMs,
+            KsState(new Array[Long](grid.length), 0L)) { (s, rows) =>
+            var n = s.n
+            rows.foreach { r =>
+              val d = r.len.toDouble
+              var i = 0
+              while (i < grid.length) {
+                if (d <= grid(i)) s.cum(i) += 1
+                i += 1
+              }
+              n += 1
+            }
+            KsState(s.cum, n)
+          } { s =>
             // batch-exact scoring: the batch op's greatest(struct(diff,
             // bin)) takes the max diff with ties toward the HIGHER bin
             // — an ascending scan with >= reproduces it; round(·, 4)
@@ -634,46 +653,71 @@ object EventTime {
             val ks = java.math.BigDecimal.valueOf(bestDiff)
               .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
             Iterator.single(KsOut(key._1, key._2, s.n, ks, bestBin))
-          } else {
-            val s = state.getOption
-              .getOrElse(KsState(new Array[Long](grid.length), 0L))
-            var n = s.n
-            rows.foreach { r =>
-              val d = r.len.toDouble
-              var i = 0
-              while (i < grid.length) {
-                if (d <= grid(i)) s.cum(i) += 1
-                i += 1
-              }
-              n += 1
-            }
-            state.update(KsState(s.cum, n))
-            state.setTimeoutTimestamp(key._1 + windowMs)
-            Iterator.empty
           }
       }
   }
 
-  /** Milliseconds per day window for [[pageHinkleyWithState]]. */
+  /** Milliseconds per day window for the sequential day monitors. */
   private val DayMs = 86400000L
 
-  /** The sequential monitors bucket days by flooring `unix_millis`
-    * into fixed UTC 86400000-ms windows (the day label must be pure
-    * long arithmetic — the event-time timeout that closes a day is
-    * registered in the same unit). Their batch twins bucket via
-    * `to_date`, which follows `spark.sql.session.timeZone` — so the
-    * bit-identical-to-batch contract holds ONLY under a UTC session.
-    * Enforced loudly here rather than silently diverging near
-    * midnight in non-UTC sessions.
+  /** A day monitor's input: the watermark, and (series, ts, day_ms)
+    * plus the monitor's own `values` columns.
+    *
+    * The monitors bucket days by flooring `unix_millis` into fixed UTC
+    * 86400000-ms windows (the day label must be pure long arithmetic —
+    * the event-time timeout that closes a day is registered in the
+    * same unit). Their batch twins bucket via `to_date`, which follows
+    * `spark.sql.session.timeZone` — so the bit-identical-to-batch
+    * contract holds ONLY under a UTC session. Enforced loudly here
+    * rather than silently diverging near midnight in non-UTC sessions.
     */
-  private def requireUtcSession(spark: SparkSession, op: String): Unit = {
-    val tz = spark.conf.get("spark.sql.session.timeZone")
+  private def dayRows(rows: Dataset[_], op: String, watermark: String,
+                      values: Column*): DataFrame = {
+    val tz = rows.sparkSession.conf.get("spark.sql.session.timeZone")
     val zone = java.time.ZoneId.of(tz, java.time.ZoneId.SHORT_IDS).normalized()
     require(zone == java.time.ZoneOffset.UTC,
       s"$op: batch-parity day bucketing requires a UTC session timezone " +
         s"(spark.sql.session.timeZone is '$tz') — the batch twin's to_date " +
         "day follows the session zone while the streaming day label is a " +
         "fixed UTC window; run with UTC or pre-bucket days upstream")
+    rows.toDF()
+      .withWatermark("ts", watermark)
+      .select(Seq(col("series"), col("ts"),
+        windowStartMs("ts", DayMs).as("day_ms")) ++ values: _*)
+  }
+
+  /** One call of a sequential day monitor: `merge` the rows into the
+    * open-day buffer that `openDays` reads (a timed-out call brings
+    * none), `close` every buffered day the watermark has passed in DAY
+    * order, then the retention tail. The tail wakes the key again when
+    * the watermark can close its next open day; an all-closed key
+    * either keeps its state (`idleRetentionMs = None` —
+    * |series|-bounded) or arms the idle-retention timeout, whose firing
+    * with nothing left to fold evicts the key.
+    */
+  private def foldClosedDays[R, S, O](state: GroupState[S], rows: Iterator[R],
+                                      idleRetentionMs: Option[Long], empty: => S)(
+      openDays: S => Map[Long, Any], merge: (S, R) => S,
+      close: (S, Long) => (S, O)): Iterator[O] = {
+    var s = state.getOption.getOrElse(empty)
+    if (!state.hasTimedOut) s = rows.foldLeft(s)(merge)
+    val wm = state.getCurrentWatermarkMs()
+    val out = openDays(s).keysIterator.filter(_ + DayMs <= wm).toSeq.sorted
+      .map { d => val (next, o) = close(s, d); s = next; o }
+    val open = openDays(s)
+    if (open.nonEmpty) {
+      state.update(s)
+      state.setTimeoutTimestamp(math.max(open.keysIterator.min + DayMs, wm + 1))
+    } else idleRetentionMs match {
+      case Some(_) if state.hasTimedOut && out.isEmpty =>
+        state.remove()
+      case Some(ms) =>
+        state.update(s)
+        state.setTimeoutTimestamp(wm + ms)
+      case None =>
+        state.update(s)
+    }
+    out.iterator
   }
 
   /** Streaming twin of the batch Page–Hinkley monitor
@@ -709,69 +753,39 @@ object EventTime {
     * eviction RESTARTS its recurrence from zero (t=1, U=0) — batch
     * parity then holds per quiet-gap-delimited segment, not for the
     * whole series history. Requires a UTC session timezone (loud
-    * `require`) — see [[requireUtcSession]].
+    * `require`) — see [[dayRows]].
     */
   def pageHinkleyWithState(rows: Dataset[TimedAmount], watermark: String,
                            idleRetentionMs: Option[Long] = None): Dataset[PhOut] = {
-    requireUtcSession(rows.sparkSession, "pageHinkleyWithState")
     import rows.sparkSession.implicits._
-    rows.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("series"), col("ts"),
-        (floor(unix_millis(col("ts")) / DayMs) * DayMs).cast("long")
-          .as("day_ms"),
+    dayRows(rows, "pageHinkleyWithState", watermark,
         expr("CAST(round(amount * 100) AS BIGINT)").as("cents"))
       .as[DayAmount]
       .groupByKey(_.series)
       .flatMapGroupsWithState[PhState, PhOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (series: String, it: Iterator[DayAmount], state: GroupState[PhState]) =>
-          var s = state.getOption.getOrElse(PhState(Map.empty, 0L, 0L, 0L, 0L))
-          if (!state.hasTimedOut) {
-            it.foreach { r =>
-              s = s.copy(days =
-                s.days.updated(r.day_ms, s.days.getOrElse(r.day_ms, 0L)
-                  + r.cents))
-            }
-          }
-          // fold every buffered day the watermark has passed, in day
-          // order — the batch recurrence verbatim (operands are
-          // non-negative, so JVM / is the same truncation as DIV)
-          val wm = state.getCurrentWatermarkMs()
-          val closed = s.days.keysIterator.filter(_ + DayMs <= wm)
-            .toSeq.sorted
-          val out = closed.map { d =>
-            val x = s.days(d)
-            val t = s.t + 1
-            val sx = s.sx + x
-            val (u, um) =
-              if (t == 1L) (0L, 0L)
-              else {
-                val u2 = s.u + x - sx / t
-                (u2, math.min(s.um, u2))
-              }
-            val ph = u - um
-            s = PhState(s.days - d, t, sx, u, um)
-            PhOut(series, d, x, u, ph, ph * 5 > sx)
-          }
-          // wake again when the watermark can close the next open day;
-          // an all-closed key either keeps its O(1) accumulator (None —
-          // |series|-bounded state) or arms the idle-retention timeout,
-          // whose firing with nothing left to fold evicts the key
-          if (s.days.nonEmpty) {
-            state.update(s)
-            state.setTimeoutTimestamp(
-              math.max(s.days.keysIterator.min + DayMs, wm + 1))
-          } else idleRetentionMs match {
-            case Some(_) if state.hasTimedOut && out.isEmpty =>
-              state.remove()
-            case Some(ms) =>
-              state.update(s)
-              state.setTimeoutTimestamp(wm + ms)
-            case None =>
-              state.update(s)
-          }
-          out.iterator
+          foldClosedDays(state, it, idleRetentionMs,
+            PhState(Map.empty, 0L, 0L, 0L, 0L))(_.days,
+            (s, r) => s.copy(days =
+              s.days.updated(r.day_ms, s.days.getOrElse(r.day_ms, 0L)
+                + r.cents)),
+            // the batch recurrence verbatim (operands are non-negative,
+            // so JVM / is the same truncation as DIV)
+            { (s, d) =>
+              val x = s.days(d)
+              val t = s.t + 1
+              val sx = s.sx + x
+              val (u, um) =
+                if (t == 1L) (0L, 0L)
+                else {
+                  val u2 = s.u + x - sx / t
+                  (u2, math.min(s.um, u2))
+                }
+              val ph = u - um
+              (PhState(s.days - d, t, sx, u, um),
+                PhOut(series, d, x, u, ph, ph * 5 > sx))
+            })
       }
   }
 
@@ -796,60 +810,34 @@ object EventTime {
     * one-long accumulator per series forever (|series|-bounded);
     * `Some(ms)` evicts a series idle for `ms` of event time, and a
     * resumed series restarts the ratio from 0. Requires a UTC session
-    * timezone (loud `require`) — see [[requireUtcSession]].
+    * timezone (loud `require`) — see [[dayRows]].
     */
   def sprtWithState(rows: Dataset[TimedFlag], watermark: String,
                     hitMicro: Long, missMicro: Long, boundMicro: Long,
                     idleRetentionMs: Option[Long] = None): Dataset[SprtOut] = {
-    requireUtcSession(rows.sparkSession, "sprtWithState")
     import rows.sparkSession.implicits._
-    rows.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("series"), col("ts"),
-        (floor(unix_millis(col("ts")) / DayMs) * DayMs).cast("long")
-          .as("day_ms"),
-        col("hit"))
+    dayRows(rows, "sprtWithState", watermark, col("hit"))
       .as[DayFlag]
       .groupByKey(_.series)
       .flatMapGroupsWithState[SprtState, SprtOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (series: String, it: Iterator[DayFlag], state: GroupState[SprtState]) =>
-          var s = state.getOption.getOrElse(SprtState(Map.empty, 0L))
-          if (!state.hasTimedOut) {
-            it.foreach { r =>
+          foldClosedDays(state, it, idleRetentionMs,
+            SprtState(Map.empty, 0L))(_.days,
+            { (s, r) =>
               val (n0, x0) = s.days.getOrElse(r.day_ms, (0L, 0L))
-              s = s.copy(days = s.days.updated(r.day_ms,
+              s.copy(days = s.days.updated(r.day_ms,
                 (n0 + 1L, x0 + (if (r.hit) 1L else 0L))))
-            }
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val closed = s.days.keysIterator.filter(_ + DayMs <= wm)
-            .toSeq.sorted
-          val out = closed.map { d =>
-            val (n, x) = s.days(d)
-            val step = x * hitMicro + (n - x) * missMicro
-            val cum = s.cum + step
-            s = SprtState(s.days - d, cum)
-            SprtOut(series, d, n, x, step, cum,
-              if (cum >= boundMicro) "accept_h1"
-              else if (cum <= -boundMicro) "accept_h0"
-              else "continue")
-          }
-          // same retention contract as pageHinkleyWithState's tail
-          if (s.days.nonEmpty) {
-            state.update(s)
-            state.setTimeoutTimestamp(
-              math.max(s.days.keysIterator.min + DayMs, wm + 1))
-          } else idleRetentionMs match {
-            case Some(_) if state.hasTimedOut && out.isEmpty =>
-              state.remove()
-            case Some(ms) =>
-              state.update(s)
-              state.setTimeoutTimestamp(wm + ms)
-            case None =>
-              state.update(s)
-          }
-          out.iterator
+            },
+            { (s, d) =>
+              val (n, x) = s.days(d)
+              val step = x * hitMicro + (n - x) * missMicro
+              val cum = s.cum + step
+              (SprtState(s.days - d, cum), SprtOut(series, d, n, x, step, cum,
+                if (cum >= boundMicro) "accept_h1"
+                else if (cum <= -boundMicro) "accept_h0"
+                else "continue"))
+            })
       }
   }
 
@@ -887,17 +875,12 @@ object EventTime {
     * (|series|-bounded keys); `Some(ms)` evicts an idle series, and a
     * resumed series restarts its trajectory — parity then holds per
     * quiet-gap-delimited segment. Requires a UTC session timezone
-    * (loud `require`) — see [[requireUtcSession]].
+    * (loud `require`) — see [[dayRows]].
     */
   def cusumWithState(rows: Dataset[TimedAmount], watermark: String,
                      idleRetentionMs: Option[Long] = None): Dataset[CusumOut] = {
-    requireUtcSession(rows.sparkSession, "cusumWithState")
     import rows.sparkSession.implicits._
-    rows.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("series"), col("ts"),
-        (floor(unix_millis(col("ts")) / DayMs) * DayMs).cast("long")
-          .as("day_ms"),
+    dayRows(rows, "cusumWithState", watermark,
         // the batch op's per-event quantization expression verbatim
         // (its `v`), reusing DayAmount's `cents` field as the carrier
         expr("CAST(round(amount * 1000) AS BIGINT)").as("cents"))
@@ -906,53 +889,33 @@ object EventTime {
       .flatMapGroupsWithState[CusumState, CusumOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (series: String, it: Iterator[DayAmount], state: GroupState[CusumState]) =>
-          var s = state.getOption.getOrElse(CusumState(Map.empty, Vector.empty))
-          if (!state.hasTimedOut) {
-            it.foreach { r =>
+          foldClosedDays(state, it, idleRetentionMs,
+            CusumState(Map.empty, Vector.empty))(_.open,
+            { (s, r) =>
               val (sv0, n0) = s.open.getOrElse(r.day_ms, (0L, 0L))
-              s = s.copy(open =
+              s.copy(open =
                 s.open.updated(r.day_ms, (sv0 + r.cents, n0 + 1L)))
-            }
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val closed = s.open.keysIterator.filter(_ + DayMs <= wm)
-            .toSeq.sorted
-          val out = closed.map { d =>
-            val (sv, n) = s.open(d)
-            val (_, sPrev, nPrev) =
-              s.pre.lastOption.getOrElse((0L, 0L, 0L))
-            val pre = s.pre :+ (d, sPrev + sv, nPrev + n)
-            s = CusumState(s.open - d, pre)
-            val sAll = pre.last._2
-            val nAll = pre.last._3
-            val mean = java.math.BigDecimal.valueOf(sAll.toDouble / nAll)
-              .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-            var bestAbs = -1L
-            var bestDay = 0L
-            var bestCus = 0L
-            pre.foreach { case (dj, sj, nj) =>
-              val cus = sj - mean * nj
-              val a = math.abs(cus)
-              if (a > bestAbs) { bestAbs = a; bestDay = dj; bestCus = cus }
-            }
-            CusumOut(series, d, bestDay, bestCus, mean, pre.length.toLong)
-          }
-          // the shared monitor tail: wake for the next open day, else
-          // keep / arm-eviction per the retention contract
-          if (s.open.nonEmpty) {
-            state.update(s)
-            state.setTimeoutTimestamp(
-              math.max(s.open.keysIterator.min + DayMs, wm + 1))
-          } else idleRetentionMs match {
-            case Some(_) if state.hasTimedOut && out.isEmpty =>
-              state.remove()
-            case Some(ms) =>
-              state.update(s)
-              state.setTimeoutTimestamp(wm + ms)
-            case None =>
-              state.update(s)
-          }
-          out.iterator
+            },
+            { (s, d) =>
+              val (sv, n) = s.open(d)
+              val (_, sPrev, nPrev) =
+                s.pre.lastOption.getOrElse((0L, 0L, 0L))
+              val pre = s.pre :+ (d, sPrev + sv, nPrev + n)
+              val sAll = pre.last._2
+              val nAll = pre.last._3
+              val mean = java.math.BigDecimal.valueOf(sAll.toDouble / nAll)
+                .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+              var bestAbs = -1L
+              var bestDay = 0L
+              var bestCus = 0L
+              pre.foreach { case (dj, sj, nj) =>
+                val cus = sj - mean * nj
+                val a = math.abs(cus)
+                if (a > bestAbs) { bestAbs = a; bestDay = dj; bestCus = cus }
+              }
+              (CusumState(s.open - d, pre),
+                CusumOut(series, d, bestDay, bestCus, mean, pre.length.toLong))
+            })
       }
   }
 
@@ -981,63 +944,38 @@ object EventTime {
     */
   def burstWithState(rows: Dataset[TimedMark], watermark: String,
                      idleRetentionMs: Option[Long] = None): Dataset[BurstOut] = {
-    requireUtcSession(rows.sparkSession, "burstWithState")
     import rows.sparkSession.implicits._
-    rows.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("series"), col("ts"),
-        (floor(unix_millis(col("ts")) / DayMs) * DayMs).cast("long")
-          .as("day_ms"))
+    dayRows(rows, "burstWithState", watermark)
       .as[DayMark]
       .groupByKey(_.series)
       .flatMapGroupsWithState[BurstState, BurstOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (series: String, it: Iterator[DayMark], state: GroupState[BurstState]) =>
-          var s = state.getOption.getOrElse(BurstState(Map.empty, Vector.empty))
-          if (!state.hasTimedOut) {
-            it.foreach { r =>
-              s = s.copy(open =
-                s.open.updated(r.day_ms, s.open.getOrElse(r.day_ms, 0L) + 1L))
-            }
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val closed = s.open.keysIterator.filter(_ + DayMs <= wm)
-            .toSeq.sorted
-          val out = closed.map { d =>
-            s = BurstState(s.open - d, s.days :+ (d, s.open(d)))
-            // the batch rule replayed verbatim over the prefix: flag
-            // under the running totals, chain consecutive CALENDAR
-            // days, peak = earliest max-count day
-            val total = s.days.iterator.map(_._2).sum
-            val nDays = s.days.length.toLong
-            var nBurst = 0L; var nEp = 0L; var longest = 0L
-            var run = 0L; var prevDay = Long.MinValue
-            var peakDay = 0L; var peakC = -1L
-            s.days.foreach { case (day, c) =>
-              if (c > peakC) { peakC = c; peakDay = day }
-              if (c * nDays > total * 2L) {
-                nBurst += 1
-                run = if (prevDay == day - DayMs) run + 1 else { nEp += 1; 1L }
-                if (run > longest) longest = run
-                prevDay = day
-              } else prevDay = Long.MinValue
-            }
-            BurstOut(series, d, nDays, nBurst, nEp, longest, peakDay, peakC)
-          }
-          if (s.open.nonEmpty) {
-            state.update(s)
-            state.setTimeoutTimestamp(
-              math.max(s.open.keysIterator.min + DayMs, wm + 1))
-          } else idleRetentionMs match {
-            case Some(_) if state.hasTimedOut && out.isEmpty =>
-              state.remove()
-            case Some(ms) =>
-              state.update(s)
-              state.setTimeoutTimestamp(wm + ms)
-            case None =>
-              state.update(s)
-          }
-          out.iterator
+          foldClosedDays(state, it, idleRetentionMs,
+            BurstState(Map.empty, Vector.empty))(_.open,
+            (s, r) => s.copy(open =
+              s.open.updated(r.day_ms, s.open.getOrElse(r.day_ms, 0L) + 1L)),
+            { (s0, d) =>
+              val s = BurstState(s0.open - d, s0.days :+ (d, s0.open(d)))
+              // the batch rule replayed verbatim over the prefix: flag
+              // under the running totals, chain consecutive CALENDAR
+              // days, peak = earliest max-count day
+              val total = s.days.iterator.map(_._2).sum
+              val nDays = s.days.length.toLong
+              var nBurst = 0L; var nEp = 0L; var longest = 0L
+              var run = 0L; var prevDay = Long.MinValue
+              var peakDay = 0L; var peakC = -1L
+              s.days.foreach { case (day, c) =>
+                if (c > peakC) { peakC = c; peakDay = day }
+                if (c * nDays > total * 2L) {
+                  nBurst += 1
+                  run = if (prevDay == day - DayMs) run + 1 else { nEp += 1; 1L }
+                  if (run > longest) longest = run
+                  prevDay = day
+                } else prevDay = Long.MinValue
+              }
+              (s, BurstOut(series, d, nDays, nBurst, nEp, longest, peakDay, peakC))
+            })
       }
   }
 }

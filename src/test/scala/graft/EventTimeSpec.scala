@@ -3,6 +3,7 @@ package graft
 import graft.streaming.{EventTime, TimedEvent}
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -713,5 +714,52 @@ class EventTimeSpec extends AnyFunSuite {
     assert(a.last.u_cents == 0L,
       s"evicted series must restart its recurrence, got u=${a.last.u_cents}")
     assert(a(1).u_cents == 0L && a(1).revenue_cents == 10000L)
+  }
+
+  test("streaming sprt, cusum and burst: idle-retention eviction restarts each monitor") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    import graft.streaming.{TimedAmount, TimedFlag, TimedMark}
+    def dts(day: Int) = new Timestamp(day.toLong * 86400000L + 12L * 3600000L)
+    val keep = Some(5L * 86400000L)
+    // the page-hinkley retention script: series a runs days 0-1, then
+    // goes quiet; b's traffic moves the watermark past a's retention
+    // timeout; a resumes on day 45, which b's day 80 closes
+    val script = Seq(Seq("a" -> 0, "a" -> 1, "b" -> 0), Seq("b" -> 20),
+      Seq("b" -> 40), Seq("a" -> 45), Seq("b" -> 80))
+    def run[T: Encoder, O: Encoder](name: String, row: (String, Int) => T)(
+        op: Dataset[T] => Dataset[O]): Seq[O] = {
+      val in = MemoryStream[T]
+      val q = op(in.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try script.foreach { step =>
+        in.addData(step.map(row.tupled))
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).as[O].collect().toSeq
+    }
+    val sprt = run("sprt_evict", (s, d) => TimedFlag(s, dts(d), hit = d < 45))(
+      EventTime.sprtWithState(_, "1 day", 1000L, -1000L, 1000000L, keep))
+      .filter(_.series == "a").sortBy(_.day_ms)
+    val cusum = run("cusum_evict", (s, d) => TimedAmount(s, dts(d), 10.0))(
+      EventTime.cusumWithState(_, "1 day", keep))
+      .filter(_.series == "a").sortBy(_.day_ms)
+    val burst = run("burst_evict", (s, d) => TimedMark(s, dts(d)))(
+      EventTime.burstWithState(_, "1 day", keep))
+      .filter(_.series == "a").sortBy(_.day_ms)
+    // an un-evicted series would carry days 0-1 into its day-45 row:
+    // sprt cum 2000 − 1000 instead of the step alone, n_days 3 not 1
+    val rows = Map(
+      "sprt" -> (sprt.map(_.day_ms / 86400000L),
+        sprt.lastOption.exists(o => o.llr_cum_micro == o.llr_step_micro)),
+      "cusum" -> (cusum.map(_.day_ms / 86400000L),
+        cusum.lastOption.exists(_.n_days == 1L)),
+      "burst" -> (burst.map(_.day_ms / 86400000L),
+        burst.lastOption.exists(_.n_days == 1L)))
+    val kept = rows.filter { case (_, (days, restarted)) =>
+      days != Seq(0L, 1L, 45L) || !restarted
+    }
+    assert(kept.isEmpty, s"evicted series must restart: $kept\n" +
+      s"sprt $sprt\ncusum $cusum\nburst $burst")
   }
 }
