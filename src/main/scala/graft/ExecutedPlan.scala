@@ -72,15 +72,21 @@ private[graft] object ExecutedPlan {
         }
   }
 
-  /** [[nodes]] plus the plans of the cached frames `p` reads. A frame
-    * persisted inside an op is computed by the first query that reads
-    * it, so a contract on what an op runs must see its plan; a census
-    * leaves it out, since it runs once however many queries read it.
+  /** [[nodes]] of `plans` plus the plans of the cached frames they
+    * read. A frame persisted inside an op is computed once, by the
+    * first query that reads it, so its plan is entered once however
+    * many of the plans read it (keyed by its cache builder, which every
+    * copy of one cached relation shares).
     */
-  def nodesWithCaches(p: SparkPlan): Iterator[SparkPlan] = nodes(p).flatMap {
-    case m: InMemoryTableScanExec =>
-      Iterator.single(m) ++ nodesWithCaches(m.relation.cachedPlan)
-    case n => Iterator.single(n)
+  def nodesWithCaches(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val entered = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def walk(p: SparkPlan): Iterator[SparkPlan] = nodes(p).flatMap {
+      case m: InMemoryTableScanExec if entered.add(m.relation.cacheBuilder) =>
+        Iterator.single(m) ++ walk(m.relation.cachedPlan)
+      case n => Iterator.single(n)
+    }
+    plans.flatMap(walk)
   }
 
   /** Operator counts of executed plans; `joins` by physical join
@@ -95,8 +101,11 @@ private[graft] object ExecutedPlan {
         s"joins=${joins.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(",")}"
   }
 
+  /** Counts over [[nodesWithCaches]]: what the plans ran, each cached
+    * frame's plan once.
+    */
   def census(plans: SparkPlan*): Census = {
-    val ns = plans.flatMap(nodes)
+    val ns = nodesWithCaches(plans)
     def n(f: PartialFunction[SparkPlan, Unit]) = ns.count(f.isDefinedAt)
     Census(
       fileScans = n { case _: FileSourceScanExec => },

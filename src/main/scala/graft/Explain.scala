@@ -14,10 +14,11 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val verbose = args.contains("-v")
     // -x: EXECUTE the query and census every plan it ran: its ops'
-    // eager checkpoints and guards, and the FINAL adaptive plan of its
-    // result (AQE re-plans join strategies, reuses exchanges and inserts
-    // AQEShuffleReads at runtime; the pre-execution plan cannot show
-    // which side was actually built/broadcast or what got coalesced)
+    // eager checkpoints and guards, the frames they cached (once each),
+    // and the FINAL adaptive plan of its result (AQE re-plans join
+    // strategies, reuses exchanges and inserts AQEShuffleReads at
+    // runtime; the pre-execution plan cannot show which side was
+    // actually built/broadcast or what got coalesced)
     val execute = args.contains("-x")
     val rest = args.filterNot(a => a == "-v" || a == "-x")
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")

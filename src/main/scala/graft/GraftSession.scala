@@ -116,6 +116,22 @@ object GraftSession {
       // pinning 0 locally aligns local mode with the cluster code path
       // rather than tuning away from it.
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      // Streaming checkpoints through Hadoop's FileSystem API, local
+      // only. Spark's default manager renames through FileContext, and
+      // without the native libhadoop the local FileContext launches a
+      // `readlink` process to resolve each path it renames. Counted on
+      // stream_dedup with a PATH shim: 82 readlink and 22 chmod
+      // launches per micro-batch, and half the running-task stack
+      // samples of a capacity run waited on a launch. The FileSystem
+      // manager renames with File.renameTo: 0 readlink, the same
+      // chmod count, higher capacity (DEPLOY §6g). The checkpoint
+      // layout, the .crc files and the check-absent-then-rename on the
+      // local FS are unchanged, so either manager resumes the other's
+      // checkpoint. HDFS and object stores launch nothing, and there
+      // FileContext renames without overwriting, so the cluster
+      // builder keeps Spark's default.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
     // Local scratch on tmpfs when the platform has one: single-host
     // shuffle blocks never leave the box, so an ext4 scratch dir pays
     // journaling + writeback syscalls for durability nothing needs

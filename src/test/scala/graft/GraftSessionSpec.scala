@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The production session factory must deliver the documented posture.
@@ -20,6 +23,21 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == (256L * 1024 * 1024).toString)
+  }
+
+  test("local session writes streaming checkpoints through the FileSystem API; the cluster builder does not") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val manager = classOf[FileSystemBasedCheckpointFileManager]
+    assert(spark.conf.get(key) == manager.getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft-checkpoint-manager")
+    val created = CheckpointFileManager.create(new Path(dir.toString), spark.sessionState.newHadoopConf())
+    assert(manager.isInstance(created), s"local session created ${created.getClass.getName}")
+    // the builder's options are not public API; read them reflectively
+    def options(b: SparkSession.Builder) =
+      b.getClass.getMethod("options").invoke(b).asInstanceOf[scala.collection.Map[String, String]]
+    val cluster = options(GraftSession.builder("x", 4))
+    assert(cluster.contains("spark.sql.adaptive.enabled"), s"builder options unread: $cluster")
+    assert(!cluster.contains(key), s"cluster builder pins $key: $cluster")
   }
 
   test("native expression family resolves through plain SQL — no register call") {

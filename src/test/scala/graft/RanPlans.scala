@@ -14,9 +14,9 @@ object RanPlans {
   def of(spark: SparkSession)(block: => Unit): Seq[SparkPlan] =
     ExecutedPlan.ran(spark)(block)
 
-  /** Every operator the plans ran, cached frames included. */
+  /** Every operator the plans ran, each cached frame's plan once. */
   def nodes(plans: Seq[SparkPlan]): Seq[SparkPlan] =
-    plans.flatMap(ExecutedPlan.nodesWithCaches)
+    ExecutedPlan.nodesWithCaches(plans)
 
   def names(plans: Seq[SparkPlan]): Seq[String] = nodes(plans).map(_.nodeName)
 

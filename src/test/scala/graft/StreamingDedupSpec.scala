@@ -2,7 +2,9 @@ package graft
 
 import graft.streaming.{NearDupHit, StreamingDedup, TimedText}
 import java.sql.Timestamp
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -275,5 +277,54 @@ class StreamingDedupSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == batchStatuses,
       s"stream != batch\n stream: $got\n batch:  $batchStatuses")
+  }
+
+  test("exactDedupIngest: a checkpoint resumes across the FileContext and FileSystem checkpoint managers, both ways") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val posture = spark.conf.get(key)
+    val fileContext = classOf[FileContextBasedCheckpointFileManager].getName
+    val batches = Seq(
+      Seq(TimedText(1, ts(0), d1), TimedText(2, ts(1), d1), TimedText(3, ts(2), d2)),
+      Seq(TimedText(4, ts(3), d3), TimedText(5, ts(4), d2)),
+      Seq(TimedText(6, ts(10), d1), TimedText(7, ts(11), d5), TimedText(8, ts(12), d5)),
+      Seq(TimedText(9, ts(13), d3), TimedText(10, ts(14), d4)))
+    // one query per manager on one checkpoint, stopped between phases;
+    // each phase runs an equal share of the batches
+    def run(managers: String*): Seq[(Long, String)] = {
+      val cp = java.nio.file.Files.createTempDirectory("graft-edi-cp").toString
+      val out = java.nio.file.Files.createTempDirectory("graft-edi-out").toString
+      val in = MemoryStream[TimedText]
+      val perPhase = batches.size / managers.size
+      try managers.zipWithIndex.foreach { case (m, i) =>
+        spark.conf.set(key, m)
+        assert(CheckpointFileManager.create(new Path(cp), spark.sessionState.newHadoopConf())
+          .getClass.getName == m)
+        val q = StreamingDedup.exactDedupIngest(in.toDF(), "doc_id", "text")
+          .writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", cp)
+          .outputMode("append").start()
+        try batches.slice(i * perPhase, (i + 1) * perPhase).foreach { b =>
+          in.addData(b)
+          q.processAllAvailable()
+        } finally q.stop()
+      } finally spark.conf.set(key, posture)
+      spark.read.parquet(out).select("doc_id", "status")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
+    }
+    val uninterrupted = run(posture)
+    assert(uninterrupted == Seq(
+      1L -> "new", 2L -> "dup_in_increment", 3L -> "new", 4L -> "new",
+      5L -> "dup_of_index", 6L -> "dup_of_index", 7L -> "new",
+      8L -> "dup_in_increment", 9L -> "dup_of_index", 10L -> "new"),
+      s"statuses drifted: $uninterrupted")
+    // docs 6 and 9 repeat texts first indexed before the restart: their
+    // dup_of_index comes from state the other manager wrote
+    for (managers <- Seq(Seq(fileContext, posture), Seq(posture, fileContext))) {
+      val got = run(managers: _*)
+      assert(got == uninterrupted,
+        s"restart ${managers.mkString(" -> ")} != uninterrupted\n got: $got\n want: $uninterrupted")
+    }
   }
 }
