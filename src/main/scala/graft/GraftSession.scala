@@ -132,6 +132,18 @@ object GraftSession {
       // builder keeps Spark's default.
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      // File modes without a process, local only. Without libhadoop,
+      // RawLocalFileSystem launches a `chmod` process to set the mode of
+      // every file it creates, checkpoint files and their .crc files
+      // included. Counted on stream_dedup with a PATH shim: 1112
+      // launches over one run's 50 micro-batches (22 per micro-batch);
+      // with GraftLocalFileSystem, which makes the same chmod(2) call
+      // in-process, 0 (A/B in DEPLOY §6g). Hadoop caches FileSystems by
+      // scheme, not by conf, so a `file:` FileSystem built in this JVM
+      // before the session keeps Hadoop's class. Cluster nodes normally
+      // ship libhadoop, and HDFS and object stores never chmod through
+      // a shell, so the cluster builder keeps Hadoop's default.
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
     // Local scratch on tmpfs when the platform has one: single-host
     // shuffle blocks never leave the box, so an ext4 scratch dir pays
     // journaling + writeback syscalls for durability nothing needs

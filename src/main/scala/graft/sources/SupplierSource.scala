@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets
 import java.util
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -109,8 +111,7 @@ private class SupplierMicroBatchStream(supplierId: String) extends MicroBatchStr
     synchronized {
       val s = start.asInstanceOf[CounterOffset].n
       val e = end.asInstanceOf[CounterOffset].n
-      (s until e).flatMap(buffered.get).map(rows =>
-        SupplierPartition(rows.toArray): InputPartition).toArray
+      (s until e).flatMap(buffered.get).map(SupplierPartition(_): InputPartition).toArray
     }
 
   override def createReaderFactory(): PartitionReaderFactory = SupplierReaderFactory
@@ -139,17 +140,41 @@ private class SupplierMicroBatchStream(supplierId: String) extends MicroBatchStr
   override def stop(): Unit = ()
 }
 
-/** Rows travel inside the partition descriptor (driver → executor). */
-private case class SupplierPartition(rows: Array[String]) extends InputPartition
+/** Rows travel inside the partition descriptor (driver → executor),
+  * encoded once as one UTF-8 buffer: row `i` ends at `ends(i)`, or at
+  * `~ends(i)` (negative) if it is null, and starts where row `i - 1`
+  * ends. Spark copies the partition into the task and into the task
+  * binaries of the stages whose closures hold the scan's plan; each
+  * copy is a bulk byte copy, and the reader decodes nothing.
+  */
+private[graft] final class SupplierPartition(utf8: Array[Byte], ends: Array[Int])
+    extends InputPartition {
+  def size: Int = ends.length
+  private def end(i: Int): Int = if (i < 0) 0 else { val e = ends(i); if (e < 0) ~e else e }
+  /** Row `i` as a view into the buffer, or null. */
+  def row(i: Int): UTF8String =
+    if (ends(i) < 0) null
+    else { val start = end(i - 1); UTF8String.fromBytes(utf8, start, ends(i) - start) }
+}
+
+private[graft] object SupplierPartition {
+  def apply(rows: Seq[String]): SupplierPartition = {
+    val utf8 = new ByteArrayOutputStream()
+    val ends = rows.map { r =>
+      if (r == null) ~utf8.size
+      else { utf8.writeBytes(r.getBytes(StandardCharsets.UTF_8)); utf8.size }
+    }.toArray
+    new SupplierPartition(utf8.toByteArray, ends)
+  }
+}
 
 private object SupplierReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val rows = partition.asInstanceOf[SupplierPartition].rows
+    val rows = partition.asInstanceOf[SupplierPartition]
     new PartitionReader[InternalRow] {
       private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow =
-        InternalRow(UTF8String.fromString(rows(i)))
+      override def next(): Boolean = { i += 1; i < rows.size }
+      override def get(): InternalRow = InternalRow(rows.row(i))
       override def close(): Unit = ()
     }
   }

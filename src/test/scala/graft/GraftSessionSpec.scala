@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftSessionSpec extends AnyFunSuite {
   import SparkTestSession._
+
+  // the builder's options are not public API; read them reflectively
+  private def clusterOptions: scala.collection.Map[String, String] = {
+    val b = GraftSession.builder("x", 4)
+    b.getClass.getMethod("options").invoke(b).asInstanceOf[scala.collection.Map[String, String]]
+  }
 
   test("factory session carries the full documented posture") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
@@ -32,10 +38,33 @@ class GraftSessionSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-checkpoint-manager")
     val created = CheckpointFileManager.create(new Path(dir.toString), spark.sessionState.newHadoopConf())
     assert(manager.isInstance(created), s"local session created ${created.getClass.getName}")
-    // the builder's options are not public API; read them reflectively
-    def options(b: SparkSession.Builder) =
-      b.getClass.getMethod("options").invoke(b).asInstanceOf[scala.collection.Map[String, String]]
-    val cluster = options(GraftSession.builder("x", 4))
+    val cluster = clusterOptions
+    assert(cluster.contains("spark.sql.adaptive.enabled"), s"builder options unread: $cluster")
+    assert(!cluster.contains(key), s"cluster builder pins $key: $cluster")
+  }
+
+  test("local session sets file modes in-process through its own file: FileSystem; the cluster builder does not") {
+    val key = "spark.hadoop.fs.file.impl"
+    val graftFs = classOf[GraftLocalFileSystem]
+    val hconf = spark.sessionState.newHadoopConf()
+    val dir = java.nio.file.Files.createTempDirectory("graft-local-fs")
+    // Hadoop caches FileSystems by scheme, not by conf: a file: FileSystem
+    // built before the session would keep Hadoop's class here
+    val fs = new Path(dir.toString).getFileSystem(hconf)
+    assert(graftFs.isInstance(fs), s"file: resolves to ${fs.getClass.getName}")
+    assert(graftFs.isInstance(FileSystem.getLocal(hconf)))
+    def mode(p: java.nio.file.Path) =
+      java.nio.file.Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    val file = dir.resolve("created")
+    fs.create(new Path(file.toString)).close()
+    val want = FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(hconf))
+    assert(mode(file) == want.toShort, f"created with ${mode(file)}%o, want ${want.toShort}%o")
+    // the sticky bit has no PosixFilePermission: Hadoop's own method sets it
+    val sub = dir.resolve("sticky")
+    java.nio.file.Files.createDirectory(sub)
+    fs.setPermission(new Path(sub.toString), new FsPermission(Integer.parseInt("1777", 8).toShort))
+    assert(mode(sub) == Integer.parseInt("1777", 8), f"sticky dir has ${mode(sub)}%o")
+    val cluster = clusterOptions
     assert(cluster.contains("spark.sql.adaptive.enabled"), s"builder options unread: $cluster")
     assert(!cluster.contains(key), s"cluster builder pins $key: $cluster")
   }
