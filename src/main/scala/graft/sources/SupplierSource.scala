@@ -5,8 +5,9 @@ import java.nio.charset.StandardCharsets
 import java.util
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -39,12 +40,25 @@ object SupplierRegistry {
   *    exactly like `FetchNextBatch` on the dispatcher thread
   *    (`batch_processor.go:126`); downstream processing of the batch
   *    is distributed
-  *  - a supplier error skips that poll — the offset does not advance,
-  *    no retry, the stream continues (`batch_processor.go:127-130`)
-  *  - an empty fetch does not advance the offset, so the trigger
-  *    idles — the `noBatchSleepInterval` backoff (`:131-136`) is the
-  *    trigger interval
-  *  - committed batches are evicted from the driver buffer (`commit`)
+  *  - each trigger runs one sweep: up to `defaultParallelism` fetches,
+  *    the task-slot analogue of the dispatcher's `available =
+  *    maxWorkers - current` (`batch_processor.go:115-145`, SURVEY.md
+  *    §2.1 row 12). Each fetched batch becomes its own input
+  *    partition, so a sweep's batches run as parallel map tasks under
+  *    one micro-batch: one plan, one state-store version and one
+  *    offset/commit log entry per sweep, not per batch
+  *  - a supplier error skips that fetch — the offset does not advance,
+  *    no retry, the sweep continues; it counts toward the sweep's
+  *    bound (`batch_processor.go:127-130`)
+  *  - an empty fetch ends the sweep without advancing the offset, so
+  *    a trigger over a drained source idles — the
+  *    `noBatchSleepInterval` backoff (`:131-136`) is the trigger
+  *    interval
+  *  - committed batches are evicted from the driver buffer (`commit`),
+  *    so the driver holds at most one sweep of uncommitted batches
+  *
+  * Under `Trigger.AvailableNow` the query delivers one sweep and stops,
+  * on a fresh or a restarted checkpoint.
   *
   * Usage:
   * {{{
@@ -80,7 +94,7 @@ private class SupplierTable(supplierId: String) extends Table with SupportsRead 
 private class SupplierScan(supplierId: String) extends Scan {
   override def readSchema(): StructType = SupplierSource.schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new SupplierMicroBatchStream(supplierId)
+    new SupplierMicroBatchStream(supplierId, SparkSession.active.sparkContext.defaultParallelism)
 }
 
 /** Offset = count of batches fetched so far. */
@@ -88,23 +102,60 @@ private case class CounterOffset(n: Long) extends Offset {
   override def json(): String = n.toString
 }
 
-private class SupplierMicroBatchStream(supplierId: String) extends MicroBatchStream {
+/** A `SupportsAdmissionControl` stream (through
+  * `SupportsTriggerAvailableNow`), so Spark calls `latestOffset(start,
+  * limit)` with the start offset; after a restart that is the
+  * recovered offset, and the fetch counter resumes past it. Spark
+  * calls a plain `MicroBatchStream.latestOffset()` before it
+  * deserializes the recovered offset, so a restarted counter would
+  * begin at 0 and its first batches would land at or below the
+  * committed offset, never planned. Under `Trigger.AvailableNow` the
+  * first sweep's end is the query's end offset.
+  *
+  * @param sweep the most supplier calls one `latestOffset` makes: the
+  *              session's task slots (`defaultParallelism`)
+  */
+private class SupplierMicroBatchStream(supplierId: String, sweep: Int)
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
   private val supplier = SupplierRegistry.get(supplierId)
   // batch index -> rows, buffered on the driver until committed
   private val buffered = mutable.LinkedHashMap.empty[Long, Seq[String]]
   private var fetched = 0L
+  // Trigger.AvailableNow: the first sweep's end, then every call's
+  private var availableNow = false
+  private var availableNowEnd: Option[Offset] = None
 
   override def initialOffset(): Offset = CounterOffset(0L)
 
-  override def latestOffset(): Offset = synchronized {
-    supplier() match {
-      case Success(batch) if batch != null && batch.nonEmpty =>
-        buffered.put(fetched, batch)
-        fetched += 1
-      case Success(_) => () // empty: offset unchanged, trigger idles (:131-136)
-      case Failure(_) => () // supplier error: skip, no retry (:127-130)
+  override def latestOffset(): Offset =
+    throw new UnsupportedOperationException("SupplierSource: call latestOffset(start, limit)")
+
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+
+  override def prepareForTriggerAvailableNow(): Unit = synchronized { availableNow = true }
+
+  /** One sweep: up to `sweep` supplier calls, ended by the first empty
+    * fetch; the offset counts the batches buffered so far.
+    */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
+    availableNowEnd.getOrElse {
+      fetched = math.max(fetched, start.asInstanceOf[CounterOffset].n)
+      var calls = 0
+      var drained = false
+      while (!drained && calls < sweep) {
+        calls += 1
+        supplier() match {
+          case Success(batch) if batch != null && batch.nonEmpty =>
+            buffered.put(fetched, batch)
+            fetched += 1
+          case Success(_) => drained = true // empty: sweep ends; no batch, trigger idles (:131-136)
+          case Failure(_) => () // supplier error: skip, no retry (:127-130)
+        }
+      }
+      val end = CounterOffset(fetched)
+      if (availableNow) availableNowEnd = Some(end)
+      end
     }
-    CounterOffset(fetched)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
@@ -120,17 +171,11 @@ private class SupplierMicroBatchStream(supplierId: String) extends MicroBatchStr
     * supplier is a non-replayable pull source (like the reference's,
     * which drops unprocessed batches on shutdown —
     * `batch_processor.go:137-140`), so batches fetched before a crash
-    * but not committed are lost: at-most-once across restarts. What
-    * this MUST do is advance the fetch counter past the recovered
-    * offset — otherwise post-restart offsets would regress below the
-    * committed watermark and every new batch would be evicted
-    * unplanned.
+    * but not committed — at most one sweep — are lost: at-most-once
+    * across restarts. The fetch counter resumes past the recovered
+    * offset in `latestOffset`.
     */
-  override def deserializeOffset(json: String): Offset = synchronized {
-    val n = json.toLong
-    if (n > fetched) fetched = n
-    CounterOffset(n)
-  }
+  override def deserializeOffset(json: String): Offset = CounterOffset(json.toLong)
 
   override def commit(end: Offset): Unit = synchronized {
     val upTo = end.asInstanceOf[CounterOffset].n

@@ -32,8 +32,11 @@ object MicroBatch {
     *                  the `OnBatchProcessed` hook (`batch_processor.go:26-28`)
     * @param pollInterval trigger period ↔ `noBatchSleepInterval`
     * @param processorTimeout per-batch deadline; non-positive → default
-    * @param availableNow drain-the-source-then-stop mode (the
-    *                     reference's "source exhausted" shutdown path)
+    * @param availableNow `Trigger.AvailableNow`: process what the source
+    *                     reports available when the query starts, then
+    *                     stop. Over SupplierSource that is one sweep (up
+    *                     to `defaultParallelism` supplier batches), not a
+    *                     drained supplier
     * @param checkpoint  checkpoint directory for restartable pipelines:
     *                    a restarted query resumes from the write-ahead
     *                    log and never re-delivers a COMMITTED batch —

@@ -1,13 +1,18 @@
 package graft
 
-import graft.streaming.{NearDupHit, StreamingDedup, TimedText}
+import graft.sources.SupplierRegistry
+import graft.streaming.{MicroBatch, NearDupHit, StreamingDedup, TimedText}
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.{Success, Try}
 
 /** Streaming near-dup ingest: batch parity across a micro-batch split,
   * cross-batch index hits, bucket-cap saturation semantics.
@@ -326,5 +331,73 @@ class StreamingDedupSpec extends AnyFunSuite {
       assert(got == uninterrupted,
         s"restart ${managers.mkString(" -> ")} != uninterrupted\n got: $got\n want: $uninterrupted")
     }
+  }
+
+  // SupplierSource sweeps: two supplier batches per sweep, "<doc_id>\t<text>"
+  // rows as perfbench's stream_dedup writes them. Sweep 1 repeats d1 across
+  // its two batches with the lower doc id in the later batch; sweep 2
+  // repeats d2 and d1 from sweep 1 and d4 across its own two batches.
+  private val sweep1 = Seq(Seq(2L -> d1, 3L -> d2), Seq(1L -> d1, 4L -> d3))
+  private val sweep2 = Seq(Seq(5L -> d2, 6L -> d4), Seq(7L -> d4, 8L -> d1))
+  private val sweepStatuses = Seq(
+    1L -> "new", 2L -> "dup_in_increment", 3L -> "new", 4L -> "new",
+    5L -> "dup_of_index", 6L -> "new", 7L -> "dup_in_increment", 8L -> "dup_of_index")
+
+  /** `exactDedupIngest` over SupplierSource `id` under MicroBatch, on one
+    * checkpoint. Each of `sweeps` is queued at once (a trigger sees all
+    * of its batches or none) and run until its rows are delivered; if
+    * `restart`, the query is stopped and restarted between sweeps.
+    * Returns each micro-batch's statuses, per sweep.
+    */
+  private def ingestSweeps(id: String, sweeps: Seq[Seq[Seq[(Long, String)]]],
+                           restart: Boolean): Seq[Seq[Seq[(Long, String)]]] = {
+    import spark.implicits._
+    val cp = java.nio.file.Files.createTempDirectory("graft-sweep-cp").toString
+    val feed = new ConcurrentLinkedQueue[Seq[String]]()
+    SupplierRegistry.register(id, () => feed.synchronized(Success(Option(feed.poll()).getOrElse(Seq.empty))))
+    val delivered = new ConcurrentLinkedQueue[Seq[(Long, String)]]()
+    def start() = MicroBatch.start(
+      StreamingDedup.exactDedupIngest(
+        spark.readStream.format("graft.sources.SupplierSource").option("supplierId", id).load()
+          .select(substring_index(col("value"), "\t", 1).cast("long").as("doc_id"),
+            expr("substring(value, instr(value, '\t') + 1)").as("text")),
+        "doc_id", "text").toDF(),
+      processor = (_, df) => Try { delivered.add(df.as[(Long, String)].collect().toSeq.sorted); df },
+      pollInterval = 0.seconds,
+      checkpoint = Some(cp))
+    var q = start()
+    try sweeps.zipWithIndex.map { case (sweep, i) =>
+      if (restart && i > 0) { q.stop(); q = start() }
+      val before = delivered.size
+      feed.synchronized(sweep.foreach(b => feed.add(b.map { case (doc, text) => s"$doc\t$text" })))
+      // a trigger already past its fetch when the sweep was queued can
+      // end processAllAvailable early, so first wait for the sweep's rows
+      val want = sweep.map(_.size).sum
+      val deadline = System.currentTimeMillis() + 30000
+      while (delivered.asScala.drop(before).map(_.size).sum < want && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      q.processAllAvailable()
+      delivered.asScala.toSeq.drop(before)
+    } finally {
+      q.stop()
+      SupplierRegistry.unregister(id)
+    }
+  }
+
+  test("exactDedupIngest over SupplierSource: one sweep is one micro-batch; statuses span its batches and earlier sweeps") {
+    assert(spark.sparkContext.defaultParallelism >= 2, "a sweep of two batches needs two task slots")
+    val got = ingestSweeps("sweep_dedup", Seq(sweep1, sweep2), restart = false)
+    assert(got.map(_.size) == Seq(1, 1), s"micro-batches per sweep: $got")
+    assert(got.flatten.flatten.sorted == sweepStatuses, s"statuses: $got")
+  }
+
+  test("exactDedupIngest over SupplierSource: a restart between sweeps re-delivers nothing and takes the next sweep") {
+    assert(spark.sparkContext.defaultParallelism >= 2, "a sweep of two batches needs two task slots")
+    val got = ingestSweeps("sweep_restart", Seq(sweep1, sweep2), restart = true)
+    // the restarted query's only micro-batch is sweep 2, whole; its
+    // dup_of_index statuses come from state the first query committed
+    assert(got.map(_.size) == Seq(1, 1), s"micro-batches per sweep: $got")
+    assert(got(1).flatten.map(_._1).sorted == sweep2.flatten.map(_._1).sorted, s"after restart: ${got(1)}")
+    assert(got.flatten.flatten.sorted == sweepStatuses, s"statuses: $got")
   }
 }

@@ -1,17 +1,25 @@
 package graft
 
-import graft.sources.{SupplierPartition, SupplierRegistry}
+import graft.sources.{SupplierPartition, SupplierRegistry, SupplierSource}
+import graft.streaming.MicroBatch
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.connector.catalog.SupportsRead
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DSv2 Supplier source must deliver every fetched batch exactly
   * once, skip supplier errors without advancing, and idle on empty
   * fetches — the reference's dispatcher semantics as a Spark source.
+  * Each trigger sweeps up to `defaultParallelism` supplier batches,
+  * one input partition each.
   */
 class SupplierSourceSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -36,6 +44,65 @@ class SupplierSourceSpec extends AnyFunSuite {
     }
     spark.table(sink).collect().toSeq
   }
+
+  /** Task slots: the most supplier batches one trigger sweeps. */
+  private def slots: Int = spark.sparkContext.defaultParallelism
+
+  /** Registers supplier `id` over `batches`: one batch per call, then
+    * empty fetches; returns the batches not yet fetched.
+    */
+  private def queued(id: String, batches: Seq[Seq[String]]): ConcurrentLinkedQueue[Seq[String]] = {
+    val q = new ConcurrentLinkedQueue[Seq[String]](batches.asJava)
+    SupplierRegistry.register(id, () => Success(Option(q.poll()).getOrElse(Seq.empty)))
+    q
+  }
+
+  /** `n` batches of 3 rows each, named by batch and row. */
+  private def batches(n: Int): Seq[Seq[String]] = (0 until n).map(b => (0 until 3).map(r => s"b$b-r$r"))
+
+  /** What one micro-batch delivers: (input partition, value) per row,
+    * in collect order.
+    */
+  private def partitioned(df: DataFrame): Seq[(Int, String)] =
+    df.select(spark_partition_id(), col("value")).collect().map(r => r.getInt(0) -> r.getString(1)).toSeq
+
+  /** The rows a micro-batch over `sweep` should hold: supplier batch
+    * `p` of the sweep in input partition `p`, rows in fetch order.
+    */
+  private def asPartitions(sweep: Seq[Seq[String]]): Seq[(Int, String)] =
+    sweep.zipWithIndex.flatMap { case (b, p) => b.map(p -> _) }
+
+  /** Streams supplier `id` back to back until no new data arrives,
+    * then unregisters it; returns each micro-batch as [[partitioned]].
+    */
+  private def microBatches(id: String): Seq[Seq[(Int, String)]] = {
+    val seen = new ConcurrentLinkedQueue[Seq[(Int, String)]]()
+    val q = spark.readStream.format("graft.sources.SupplierSource")
+      .option("supplierId", id).load()
+      .writeStream.foreachBatch { (df: DataFrame, _: Long) => seen.add(partitioned(df)); () }
+      .start()
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      SupplierRegistry.unregister(id)
+    }
+    seen.asScala.toSeq
+  }
+
+  private type Stream = MicroBatchStream with SupportsAdmissionControl
+
+  /** The source's micro-batch stream, built the way Spark builds it. */
+  private def streamOf(id: String): Stream =
+    new SupplierSource()
+      .getTable(SupplierSource.schema, Array.empty, Map("supplierId" -> id).asJava)
+      .asInstanceOf[SupportsRead]
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .toMicroBatchStream(java.nio.file.Files.createTempDirectory("graft-sweep").toString)
+      .asInstanceOf[Stream]
+
+  /** One trigger's sweep from `start`, as Spark asks for it. */
+  private def sweepFrom(stream: Stream, start: String): String =
+    stream.latestOffset(stream.deserializeOffset(start), ReadLimit.allAvailable()).json()
 
   test("supplier batches flow through a distributed transform exactly once") {
     val n = new AtomicInteger(0)
@@ -100,5 +167,94 @@ class SupplierSourceSpec extends AnyFunSuite {
     oos.close()
     val bound = utf8Bytes + 4L * rows.size + 1024
     assert(out.size <= bound, s"serialized ${out.size} bytes > $bound (UTF-8 $utf8Bytes)")
+  }
+
+  test("a trigger sweeps up to defaultParallelism batches: a 2N+1 backlog arrives as N, N and 1, one partition each") {
+    val n = slots
+    val all = batches(2 * n + 1)
+    queued("s_sweep", all)
+    val got = microBatches("s_sweep")
+    assert(got.map(_.map(_._1).distinct.size) == Seq(n, n, 1), s"partitions per micro-batch: $got")
+    assert(got == Seq(all.take(n), all.slice(n, 2 * n), all.drop(2 * n)).map(asPartitions),
+      s"micro-batches: $got")
+  }
+
+  test("a sweep stops at the first empty fetch") {
+    queued("s_gap", Seq(Seq("b0-a", "b0-b"), Seq.empty, Seq("b1-a")))
+    val got = microBatches("s_gap")
+    assert(got == Seq(Seq(0 -> "b0-a", 0 -> "b0-b"), Seq(0 -> "b1-a")), s"micro-batches: $got")
+  }
+
+  test("a failed fetch is skipped without advancing, keeps the sweep going, and counts toward its bound") {
+    val n = slots
+    val calls = new AtomicInteger(0)
+    SupplierRegistry.register("s_down", () => {
+      calls.incrementAndGet()
+      Failure(new RuntimeException("supplier down"))
+    })
+    try {
+      val down = streamOf("s_down")
+      (1 to 3).foreach { k =>
+        assert(sweepFrom(down, "0") == "0")
+        assert(calls.get() == k * n, s"after $k sweeps: ${calls.get()} calls, bound $n per sweep")
+      }
+    } finally SupplierRegistry.unregister("s_down")
+    // every other fetch fails: one sweep buffers the ceil(n / 2) batches
+    // its n calls found
+    val flaky = new AtomicInteger(0)
+    SupplierRegistry.register("s_flaky", () => {
+      val i = flaky.getAndIncrement()
+      if (i % 2 == 1) Failure(new RuntimeException("flaky")) else Success(Seq(s"b$i"))
+    })
+    try {
+      val stream = streamOf("s_flaky")
+      val end = sweepFrom(stream, "0")
+      assert(flaky.get() == n)
+      assert(end == ((n + 1) / 2).toString)
+      val parts = stream.planInputPartitions(stream.initialOffset(), stream.deserializeOffset(end))
+        .map(_.asInstanceOf[SupplierPartition])
+      assert(parts.map(p => p.row(0).toString).toSeq == (0 until n by 2).map(i => s"b$i"))
+    } finally SupplierRegistry.unregister("s_flaky")
+  }
+
+  test("a restarted stream buffers its next sweep past the recovered offset") {
+    val all = batches(2)
+    queued("s_resume", all)
+    try {
+      // a fresh stream on a checkpoint whose offset log ends at 7
+      val stream = streamOf("s_resume")
+      assert(sweepFrom(stream, "7") == "9")
+      val parts = stream.planInputPartitions(stream.deserializeOffset("7"), stream.deserializeOffset("9"))
+        .map(_.asInstanceOf[SupplierPartition])
+      assert(parts.map(p => (0 until p.size).map(p.row(_).toString)).toSeq == all)
+    } finally SupplierRegistry.unregister("s_resume")
+  }
+
+  test("AvailableNow delivers one sweep and stops; a restart on its checkpoint delivers the next") {
+    val n = slots
+    val all = batches(2 * n + 1)
+    val left = queued("s_now", all)
+    val cp = java.nio.file.Files.createTempDirectory("graft-now-cp").toString
+    def run(): Seq[Seq[(Int, String)]] = {
+      val seen = new ConcurrentLinkedQueue[Seq[(Int, String)]]()
+      val q = MicroBatch.start(
+        spark.readStream.format("graft.sources.SupplierSource").option("supplierId", "s_now").load(),
+        processor = (_, df) => Try { seen.add(partitioned(df)); df },
+        availableNow = true,
+        checkpoint = Some(cp))
+      try assert(q.awaitTermination(30000), "AvailableNow query did not stop")
+      finally q.stop()
+      seen.asScala.toSeq
+    }
+    try {
+      // the query's end offset is its first sweep's; the rest stays
+      // with the supplier
+      val first = run()
+      assert(first == Seq(asPartitions(all.take(n))), s"first run: $first")
+      assert(left.asScala.toSeq == all.drop(n))
+      val second = run()
+      assert(second == Seq(asPartitions(all.slice(n, 2 * n))), s"restarted run: $second")
+      assert(left.asScala.toSeq == all.drop(2 * n))
+    } finally SupplierRegistry.unregister("s_now")
   }
 }
