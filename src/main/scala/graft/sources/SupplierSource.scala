@@ -43,7 +43,8 @@ object SupplierRegistry {
   *  - each trigger runs one sweep: up to `defaultParallelism` fetches,
   *    the task-slot analogue of the dispatcher's `available =
   *    maxWorkers - current` (`batch_processor.go:115-145`, SURVEY.md
-  *    §2.1 row 12). Each fetched batch becomes its own input
+  *    §2.1 row 12), and never more than [[SupplierSource.MaxSweep]].
+  *    Each fetched batch becomes its own input
   *    partition, so a sweep's batches run as parallel map tasks under
   *    one micro-batch: one plan, one state-store version and one
   *    offset/commit log entry per sweep, not per batch
@@ -77,6 +78,16 @@ class SupplierSource extends TableProvider {
 
 object SupplierSource {
   val schema: StructType = StructType(Seq(StructField("value", StringType)))
+
+  /** The most supplier calls one trigger makes on any session. Every
+    * batch of a sweep rides in the task binary of the stage that reads
+    * it, so each map task deserializes the whole sweep and a trigger's
+    * deserialize work grows with the square of the sweep: 15–16, 41–43
+    * and 135–163 ms of map-task time per trigger for sweeps of 4, 8 and
+    * 16 batches of 5000 rows (DEPLOY.md §6h). A larger sweep needs the
+    * rows out of the task binary first.
+    */
+  val MaxSweep = 4
 }
 
 private class SupplierTable(supplierId: String) extends Table with SupportsRead {
@@ -112,12 +123,14 @@ private case class CounterOffset(n: Long) extends Offset {
   * committed offset, never planned. Under `Trigger.AvailableNow` the
   * first sweep's end is the query's end offset.
   *
-  * @param sweep the most supplier calls one `latestOffset` makes: the
-  *              session's task slots (`defaultParallelism`)
+  * @param slots the session's task slots (`defaultParallelism`); one
+  *              `latestOffset` makes at most this many supplier calls,
+  *              and never more than [[SupplierSource.MaxSweep]]
   */
-private class SupplierMicroBatchStream(supplierId: String, sweep: Int)
+private[graft] class SupplierMicroBatchStream(supplierId: String, slots: Int)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   private val supplier = SupplierRegistry.get(supplierId)
+  private val sweep = math.min(slots, SupplierSource.MaxSweep)
   // batch index -> rows, buffered on the driver until committed
   private val buffered = mutable.LinkedHashMap.empty[Long, Seq[String]]
   private var fetched = 0L

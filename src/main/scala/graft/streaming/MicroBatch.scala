@@ -35,8 +35,8 @@ object MicroBatch {
     * @param availableNow `Trigger.AvailableNow`: process what the source
     *                     reports available when the query starts, then
     *                     stop. Over SupplierSource that is one sweep (up
-    *                     to `defaultParallelism` supplier batches), not a
-    *                     drained supplier
+    *                     to `defaultParallelism` supplier batches, at most
+    *                     `SupplierSource.MaxSweep`), not a drained supplier
     * @param checkpoint  checkpoint directory for restartable pipelines:
     *                    a restarted query resumes from the write-ahead
     *                    log and never re-delivers a COMMITTED batch —

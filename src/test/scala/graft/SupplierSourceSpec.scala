@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{SupplierPartition, SupplierRegistry, SupplierSource}
+import graft.sources.{SupplierMicroBatchStream, SupplierPartition, SupplierRegistry, SupplierSource}
 import graft.streaming.MicroBatch
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentLinkedQueue
@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * once, skip supplier errors without advancing, and idle on empty
   * fetches — the reference's dispatcher semantics as a Spark source.
   * Each trigger sweeps up to `defaultParallelism` supplier batches,
-  * one input partition each.
+  * never more than `SupplierSource.MaxSweep`, one input partition each.
   */
 class SupplierSourceSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -45,8 +45,10 @@ class SupplierSourceSpec extends AnyFunSuite {
     spark.table(sink).collect().toSeq
   }
 
-  /** Task slots: the most supplier batches one trigger sweeps. */
-  private def slots: Int = spark.sparkContext.defaultParallelism
+  /** The most supplier batches one trigger sweeps: the task slots,
+    * capped.
+    */
+  private def slots: Int = math.min(spark.sparkContext.defaultParallelism, SupplierSource.MaxSweep)
 
   /** Registers supplier `id` over `batches`: one batch per call, then
     * empty fetches; returns the batches not yet fetched.
@@ -215,6 +217,16 @@ class SupplierSourceSpec extends AnyFunSuite {
         .map(_.asInstanceOf[SupplierPartition])
       assert(parts.map(p => p.row(0).toString).toSeq == (0 until n by 2).map(i => s"b$i"))
     } finally SupplierRegistry.unregister("s_flaky")
+  }
+
+  test("a sweep makes at most MaxSweep supplier calls, however many task slots the session has") {
+    val calls = new AtomicInteger(0)
+    SupplierRegistry.register("s_cap", () => Success(Seq(s"b${calls.getAndIncrement()}")))
+    try {
+      val stream = new SupplierMicroBatchStream("s_cap", slots = 64)
+      assert(sweepFrom(stream, "0") == SupplierSource.MaxSweep.toString)
+      assert(calls.get() == SupplierSource.MaxSweep)
+    } finally SupplierRegistry.unregister("s_cap")
   }
 
   test("a restarted stream buffers its next sweep past the recovered offset") {
