@@ -1,10 +1,12 @@
 // Steady-state trigger breakdown of the stream ingest: SupplierSource ->
 // exactDedupIngest under MicroBatch.start, triggers back to back.
 //
-// Queues (20 + triggers) * batchesPerTrigger supplier batches of 5000
+// Queues (20 + triggers) * defaultParallelism supplier batches of 5000
 // "<doc_id>\t<text>" rows (texts of 8-40 words over a 64-word vocabulary,
-// ~30% repeats; the supplier hands out one batch per call), skips the
-// first 20 non-empty triggers, and prints for the rest:
+// ~30% repeats; the supplier hands out one batch per call), enough for
+// every trigger to take a full sweep (a build that takes fewer batches
+// per trigger runs more triggers over the same rows), skips the first
+// 20 non-empty triggers, and prints for the rest:
 //   - the p50 of each StreamingQueryProgress durationMs key, of the state
 //     operator's commitTimeMs and allUpdatesTimeMs, rows per trigger and
 //     rows per second of trigger time
@@ -12,7 +14,7 @@
 //     batches, 1: the stateful result stage): p50 wall time and summed
 //     task run and deserialize time
 //   - a wall-clock split of the stream execution thread: its stack is
-//     sampled every `sampleMs` and each sample is charged to the innermost
+//     sampled every 1 ms and each sample is charged to the innermost
 //     marker frame (job wait, closure cleaning, query planning, broadcast,
 //     input-partition planning) or to "other"
 //
@@ -21,7 +23,7 @@
 //     -classpath "<classes>:<spark-jars>/*" tools/TriggerBreakdown.scala
 //   java <the --add-opens list of perfbench/run.py> -Xmx4g \
 //     -cp "<out>:<classes>:<spark-jars>/*" TriggerBreakdown \
-//     <checkpoint-dir> [triggers=40] [batchesPerTrigger=1] [sampleMs=1]
+//     <checkpoint-dir> [triggers=40]
 // The checkpoint directory must not exist yet.
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
@@ -43,6 +45,7 @@ import graft.streaming.{MicroBatch, StreamingDedup}
 object TriggerBreakdown {
   val BatchRows = 5000
   val Warm = 20
+  val SampleMs = 1
 
   /** Marker frames, matched on "class.method"; a sample goes to the
     * innermost frame that matches one.
@@ -81,7 +84,7 @@ object TriggerBreakdown {
   /** Charges stack samples of the thread named `prefix...` to markers
     * while `on` is set.
     */
-  final class Sampler(prefix: String, everyMs: Int) extends Thread("trigger-breakdown-sampler") {
+  final class Sampler(prefix: String) extends Thread("trigger-breakdown-sampler") {
     @volatile var on = false
     @volatile var done = false
     val counts = new ConcurrentHashMap[String, Long]()
@@ -102,7 +105,7 @@ object TriggerBreakdown {
             counts.merge(name, 1L, _ + _)
           }
         }
-        LockSupport.parkNanos(everyMs * 1000000L)
+        LockSupport.parkNanos(SampleMs * 1000000L)
       }
     }
   }
@@ -110,18 +113,17 @@ object TriggerBreakdown {
   def main(args: Array[String]): Unit = {
     val ckpt = args(0)
     val triggers = args.lift(1).fold(40)(_.toInt)
-    val perTrigger = args.lift(2).fold(1)(_.toInt)
-    val sampleMs = args.lift(3).fold(1)(_.toInt)
     val spark = GraftSession.local(4, "trigger-breakdown").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val queue = batches((Warm + triggers) * perTrigger)
+    val slots = spark.sparkContext.defaultParallelism
+    val queue = batches((Warm + triggers) * slots)
     val rows = queue.asScala.map(_.size.toLong).sum
     SupplierRegistry.register("breakdown", () => Success(Option(queue.poll()).getOrElse(Seq.empty)))
 
     val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
     val delivered = new AtomicInteger(0)
-    val sampler = new Sampler("stream execution thread for graft-micro-batch", sampleMs)
+    val sampler = new Sampler("stream execution thread for graft-micro-batch")
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
@@ -162,8 +164,7 @@ object TriggerBreakdown {
 
     val measured = progress.asScala.toSeq.sortBy(_.batchId).drop(Warm)
     val keys = measured.flatMap(_.durationMs.keySet.asScala).distinct.sorted
-    println(s"triggers ${measured.size} (after $Warm warm), batches per trigger set to $perTrigger, " +
-      s"slots ${spark.sparkContext.defaultParallelism}")
+    println(s"triggers ${measured.size} (after $Warm warm), slots $slots")
     println(f"rows per trigger mean ${measured.map(_.numInputRows).sum.toDouble / measured.size.max(1)}%.0f, " +
       f"rows/s of trigger time ${measured.map(_.numInputRows).sum * 1000.0 /
         measured.map(_.durationMs.get("triggerExecution").longValue).sum.max(1L)}%.0f")
@@ -181,7 +182,7 @@ object TriggerBreakdown {
     val samples = sampler.counts.asScala.toSeq
     val total = samples.map(_._2).sum.max(1L)
     val (other, marked) = samples.partition(_._1.startsWith("other: "))
-    println(s"stream execution thread, $total samples every $sampleMs ms:")
+    println(s"stream execution thread, $total samples every $SampleMs ms:")
     (marked :+ ("other" -> other.map(_._2).sum)).sortBy(-_._2).foreach { case (k, n) =>
       println(f"  $k%-20s ${100.0 * n / total}%5.1f%%")
     }
